@@ -5,6 +5,8 @@ in DuckDB over the same parquet tables and compare to the Spark dump.
 Usage: python3 scripts/check_oracle.py <sfDir> <verifyOutDir>
 """
 import json
+import os
+import re
 import sys
 
 import duckdb
@@ -25,21 +27,22 @@ def main(sf_dir, out_dir):
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
-    import os
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    only = (re.compile(os.environ["SPARK_GRAFT_ONLY"])
+            if os.environ.get("SPARK_GRAFT_ONLY") else None)
     failures = 0
     for name, sql in sorted(oracle.items()):
-        # A filtered (SPARK_GRAFT_ONLY) dump has no dir for the skipped
-        # queries — skip them BEFORE running the oracle SQL (some oracle
-        # replays are deliberately expensive; executing them for absent
-        # dumps turns a 2-query pre-flight into a full-corpus replay).
-        # Only when the filter env is actually set: in a FULL run a
-        # missing dir means the dump CRASHED, and that must stay a FAIL,
-        # not a silent skip.
+        # A filtered (SPARK_GRAFT_ONLY) dump has no dir for the queries the
+        # filter excludes — skip exactly those (re.search, as graft.Verify
+        # matches) BEFORE running the oracle SQL: some oracle replays are
+        # deliberately expensive, and executing them for absent dumps turns
+        # a 2-query pre-flight into a full-corpus replay. Any other missing
+        # dir means the dump CRASHED, and that must stay a FAIL, not a
+        # silent skip.
+        if only is not None and not only.search(name):
+            print(f"SKIP {name}: not selected by SPARK_GRAFT_ONLY")
+            continue
         if not os.path.isdir(os.path.join(out_dir, name)):
-            if os.environ.get("SPARK_GRAFT_ONLY"):
-                print(f"SKIP {name}: not dumped")
-                continue
             print(f"FAIL {name}: not dumped (dump step crashed?)")
             failures += 1
             continue
@@ -73,7 +76,6 @@ def main(sf_dir, out_dir):
         else:
             print(f"OK   {name} ({len(got_c)} rows)")
     # rows-only entries (queries without oracle)
-    import os
     dumped = {d for d in os.listdir(out_dir)
               if os.path.isdir(os.path.join(out_dir, d))}
     for name in sorted(dumped - set(oracle)):

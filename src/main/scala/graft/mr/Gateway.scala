@@ -1,6 +1,7 @@
 package graft.mr
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import graft.sources.Sources
 import org.apache.spark.sql.SparkSession
 
 import java.net.InetSocketAddress
@@ -89,7 +90,7 @@ final class Gateway(spark: SparkSession, store: JobStore, port: Int = 2335,
         return
       }
       val body = new String(raw, StandardCharsets.UTF_8)
-      graft.sources.Sources.parseLaunchJson(spark, body) match {
+      Sources.parseLaunchJson(spark, body) match {
         case Left(_) =>
           // field-check failure = bare 400, like check_launch_request
           respond(ex, 400, "", "text/plain")
@@ -99,7 +100,7 @@ final class Gateway(spark: SparkSession, store: JobStore, port: Int = 2335,
             launch.mapperNum, launch.reducerNum)
           store.launchAsync(spark, spec, launch.kvs) match {
             case Left(msg) =>
-              respond(ex, 500, s"""{"ok":false,"message":${jstr(msg)}}""")
+              respond(ex, 500, s"""{"ok":false,"message":${Sources.jsonString(msg)}}""")
             case Right(id) =>
               respond(ex, 200, s"""{"ok":true,"message":"","job_id":$id}""")
           }
@@ -130,7 +131,7 @@ final class Gateway(spark: SparkSession, store: JobStore, port: Int = 2335,
           store.fetchResultLeased(id, token) match {
             case Right(JobStore.InlineResult(results)) =>
               respond(ex, 200,
-                results.iterator.map(jstr).mkString(
+                results.iterator.map(Sources.jsonString).mkString(
                   """{"ok":true,"message":"","result":[""", ",", "]}"))
             case Right(sp: JobStore.SpilledResult) =>
               // Size-gated path: the result never materialized on the
@@ -142,7 +143,7 @@ final class Gateway(spark: SparkSession, store: JobStore, port: Int = 2335,
               try streamResult(ex, JobStore.readSpilled(spark, sp))
               finally store.releaseSpill(sp)
             case Left(msg) =>
-              respond(ex, 500, s"""{"ok":false,"message":${jstr(msg)}}""")
+              respond(ex, 500, s"""{"ok":false,"message":${Sources.jsonString(msg)}}""")
           }
         case _ => respond(ex, 400, "", "text/plain")
       }
@@ -171,7 +172,7 @@ final class Gateway(spark: SparkSession, store: JobStore, port: Int = 2335,
       rows.foreach { r =>
         if (!first) w.write(",")
         first = false
-        w.write(jstr(r))
+        w.write(Sources.jsonString(r))
       }
       w.write("]}")
     } finally {
@@ -198,21 +199,11 @@ final class Gateway(spark: SparkSession, store: JobStore, port: Int = 2335,
           store.cancel(spark, id, token) match {
             case Right(()) => respond(ex, 200, """{"ok":true,"message":""}""")
             case Left(msg) =>
-              respond(ex, 500, s"""{"ok":false,"message":${jstr(msg)}}""")
+              respond(ex, 500, s"""{"ok":false,"message":${Sources.jsonString(msg)}}""")
           }
         case _ => respond(ex, 400, "", "text/plain")
       }
     }
-
-  private def jstr(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
 
   private def respond(
       ex: HttpExchange, code: Int, body: String,

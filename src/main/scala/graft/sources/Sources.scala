@@ -89,20 +89,25 @@ object Sources {
   /** O10 sink: write result strings as a single JSON array file (the
     * `/getresult` response body shape, gateway.cc:167-176).
     */
-  def writeResultJson(results: Seq[String], path: String): Unit = {
-    def esc(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+  def writeResultJson(results: Seq[String], path: String): Unit =
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(path),
-      results.map(esc).mkString("[", ",", "]"))
-  }
+      results.map(jsonString).mkString("[", ",", "]"))
+
+  /** `s` as a JSON string literal: quote, backslash and ALL control chars
+    * (< 0x20) escaped — a tab or CR left raw makes the reader's JSON
+    * parse fail. Shared by the result sinks, the gateway's responses and
+    * the Verify oracle dump.
+    */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 
   /** Distributed result sink for large outputs: one string column to a
     * JSON-lines directory (each line `{"result": ...}`) — the scale form

@@ -1077,7 +1077,7 @@ class EventStreamSpec extends SparkSuite {
   }
 
   test("skipping the no-data finalization batch leaves opted-in results identical") {
-    // One representative per opted-in class (see runToParquet's
+    // One representative per opted-in class (see runStream's
     // withNoDataBatchesSkipped scaladoc): dedup-key state, stream-stream
     // INNER join buffers, the NoTimeout flatMapGroupsWithState gate, and
     // the multi-batch incremental dedup. Each runs with the skip active
@@ -1129,5 +1129,43 @@ class EventStreamSpec extends SparkSuite {
             s"(${base.length} vs ${rocks.length} rows)")
       } finally sys.props.remove("spark.graft.stream.provider")
     }
+  }
+
+  test("the runner fails loudly when a run breaks its data-batch contract") {
+    val cases = Seq(
+      ("exactly 1 over the two-file split",
+        EventStream.splitStream(spark, EventStream.EventSplit(sf)),
+        EventStream.exactly(1), "ran 2 data micro-batches"),
+      ("at least 2 over the single-file events table",
+        EventStream.readEventsTable(spark, sf),
+        EventStream.atLeast(2), "ran 1 data micro-batches"))
+    cases.foreach { case (what, src, batches, msg) =>
+      val e = intercept[IllegalStateException](EventStream.runStream(
+        EventStream.tumblingCounts(src),
+        EventStream.ToMemory(org.apache.spark.sql.streaming.OutputMode.Append()),
+        batches))
+      assert(e.getMessage.contains(msg), s"$what: ${e.getMessage}")
+    }
+  }
+
+  test("a restart run's checkpoint and sink dirs are gone after the next run") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def restartDirs(): Set[String] =
+      Option(tmp.list()).toSet.flatten.filter(_.startsWith("graft_restart_"))
+    val before = restartDirs()
+    EventStream.c5StreamRestartState(spark, sf).collect()
+    val firstRun = restartDirs() -- before
+    assert(firstRun.nonEmpty, "the first run's sink should live until the next run")
+    EventStream.c5StreamRestartState(spark, sf).collect()
+    val left = firstRun & restartDirs()
+    assert(left.isEmpty, s"the first restart run's dirs outlived the second: $left")
+  }
+
+  test("memory-sink views are dropped at the next run") {
+    EventStream.c5StreamTopKIncr(spark, sf).collect()
+    EventStream.c5StreamTopKIncr(spark, sf).collect()
+    val views = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("graft_stream_q"))
+    assert(views.length <= 1, s"memory-sink views kept alive: ${views.mkString(", ")}")
   }
 }
