@@ -58,13 +58,13 @@ object SparkEntry {
         "c3_ann_staleness", "c3_ann_cells").contains(_),
       (s, d) => { SimOps.ensureAnnIndex(s, d); () }),
     // The incremental-semantic family reads the corpus-SCALED index
-    // (≈√n cells — its batch is a corpus fraction; see
-    // SimOps.ensureScaledAnnIndex), a separate persisted layout.
+    // (its batch is a corpus fraction; see SimOps.AnnIndex.Scaled), a
+    // separate persisted layout.
     Warmup("ann_index_scaled",
       Set("c2_incremental_semantic", "c5_stream_semantic",
         "c2_incremental_semantic_topc", "c5_stream_semantic_topc",
         "c5_stream_semantic_live").contains(_),
-      (s, d) => { SimOps.ensureScaledAnnIndex(s, d); () }),
+      (s, d) => { SimOps.ensureAnnIndex(s, d, SimOps.AnnIndex.Scaled); () }),
     Warmup("dedup_index", _ == "c2_incremental_dedup_indexed",
       (s, d) => { DedupOps.ensureDedupIndex(s, d); () }),
     Warmup("dedup_labels", _ == "c2_incremental_cc",

@@ -9,6 +9,11 @@ import java.util.concurrent.atomic.AtomicLong
   * master job table + HTTP gateway surface:
   *  - launch validation: mapper/reducer > 0, non-empty input
   *    (`/root/reference/src/tmapreduce/master.cc:530-535`);
+  *  - a launch bound the reference does not have: mapper/reducer counts
+  *    above [[JobStore.MaxTaskCount]] are rejected, because each count
+  *    becomes a Spark shuffle width and in local mode its tasks run
+  *    inside the gateway JVM — one `"mapper_num": 2147483647` launch
+  *    would otherwise ask for a 2^31-partition shuffle;
   *  - bounded admission: at most `maxConcurrent` jobs execute at once,
   *    later launches wait in a FIFO Queued state — the analog of the
   *    reference queueing subjobs until a worker is idle
@@ -126,6 +131,8 @@ final class JobStore(
       input: Dataset[(String, String)]): Either[String, JobTypeRegistry.MapReduceFn] =
     if (spec.mappers <= 0 || spec.reducers <= 0)
       Left("mapper_num and reducer_num must be > 0") // master.cc:530-532
+    else if (spec.mappers > JobStore.MaxTaskCount || spec.reducers > JobStore.MaxTaskCount)
+      Left(s"mapper_num and reducer_num must be <= ${JobStore.MaxTaskCount}")
     else JobTypeRegistry.lookup(spec.jobType) match {
       case None => Left(s"unknown job type: ${spec.jobType}") // no capable worker
       case Some(fns) =>
@@ -470,6 +477,12 @@ object JobStore {
     * count (`master.cc:180-349` re-queues when none is idle).
     */
   val DefaultMaxConcurrent: Int = 4
+  /** Largest accepted mapper/reducer count (a deviation from the
+    * reference, which only checks > 0): far above any count a job
+    * needs (32 at most today), far below a shuffle width that could
+    * exhaust the driver.
+    */
+  val MaxTaskCount: Int = 1024
   /** Inline-result bound: results measured larger than this never land
     * on the driver heap — they spill to a parquet sink and stream back.
     * 16 MiB keeps every plausible control-plane result inline while

@@ -585,6 +585,23 @@ object DedupOps {
       Seq(base, mem))
   }
 
+  /** The dedup layout's coordinates: the corpus source and the banding
+    * (a layout banded differently is not this layout).
+    */
+  private def dedupSource(dir: String): Seq[String] = Seq(s"$dir/documents.parquet")
+  private def dedupParams(numHashes: Int, bands: Int): String = s"${numHashes}h${bands}b"
+
+  /** The layout's TOMBSTONE table (`doc_id` rows appended by
+    * [[deleteFromDedupIndex]], cleared by [[compactDedupIndex]]) — absent
+    * until the first delete; readers treat absence as empty. Swept with
+    * the index it belongs to.
+    */
+  private val TombstoneRole = "graft_mh_del_"
+
+  private def tombstoneTab(dir: String, numHashes: Int, bands: Int): String =
+    graft.sources.Storage.layoutNames(Seq(TombstoneRole), dedupSource(dir),
+      dedupParams(numHashes, bands)).head
+
   /** One-time LSH LAYOUT of the standing corpus — the ingest posture
     * incremental dedup has at 100 TB: the corpus is banded and tokenized
     * ONCE when documents arrive (the b8/ANN-index posture applied to the
@@ -593,55 +610,31 @@ object DedupOps {
     * `(doc_id, toks)` — the layout is self-contained, so the query path
     * never re-scans or re-tokenizes the raw corpus, and documents
     * appended later via [[appendDedupIndex]] (arrivals not present in
-    * the parquet corpus) are first-class match candidates. Keyed by
-    * corpus fingerprint + banding params (a layout banded differently is
-    * not this layout); stale/differently-parameterized layouts are
-    * swept. Idempotent; returns (membershipTable, tokenTable).
+    * the parquet corpus) are first-class match candidates. Keyed, built
+    * and swept (tombstones included) by
+    * [[graft.sources.Storage.ensureLayout]]. Returns (membershipTable,
+    * tokenTable).
     */
-  /** Fingerprint+params key shared by every table of one dedup layout. */
-  private def dedupSuffix(dir: String, numHashes: Int, bands: Int): String =
-    graft.sources.Storage.sourceFingerprint(s"$dir/documents.parquet") +
-      s"_${numHashes}h${bands}b"
-
-  /** The layout's TOMBSTONE table (`doc_id` rows appended by
-    * [[deleteFromDedupIndex]], cleared by [[compactDedupIndex]]) — absent
-    * until the first delete; readers treat absence as empty.
-    */
-  private def tombstoneTab(suffix: String): String = s"graft_mh_del_$suffix"
-
-  private def tombstones(spark: SparkSession, suffix: String): Option[DataFrame] = {
-    val t = tombstoneTab(suffix)
-    if (spark.catalog.tableExists(t)) Some(spark.table(t)) else None
-  }
-
   private[graft] def ensureDedupIndex(spark: SparkSession, dir: String,
-      numHashes: Int = IncHashes, bands: Int = IncBands,
-      sweepStale: Boolean = true): (String, String) = {
-    import graft.sources.Storage.dropStaleLayouts
-    val suffix = dedupSuffix(dir, numHashes, bands)
-    val (memTab, toksTab) = (s"graft_mh_mem_$suffix", s"graft_mh_toks_$suffix")
-    if (spark.catalog.tableExists(memTab) && spark.catalog.tableExists(toksTab))
-      return (memTab, toksTab)
-    // sweepStale = false builds a side corpus's layout (MaintBench temp
-    // dirs, throwaway spec corpora) without dropping the live corpus's.
-    if (sweepStale) {
-      dropStaleLayouts(spark, "graft_mh_mem_", suffix)
-      dropStaleLayouts(spark, "graft_mh_toks_", suffix)
-      dropStaleLayouts(spark, "graft_mh_del_", suffix)
+      numHashes: Int = IncHashes, bands: Int = IncBands): (String, String) = {
+    val Seq(memTab, toksTab) = graft.sources.Storage.ensureLayout(spark,
+      Seq("graft_mh_mem_", "graft_mh_toks_"), dedupSource(dir),
+      dedupParams(numHashes, bands), sweepAlso = Seq(TombstoneRole)) {
+      case Seq(mem, toks) =>
+        val corpus = docs(spark, dir).filter(col("doc_id") % 10 =!= 7)
+          .select(col("doc_id"), MinHash.tokenSet(col("text")).as("toks"))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try {
+          // Token sets first: a crash between the writes leaves at most a
+          // toks table with no membership table — a partial layout,
+          // rebuilt by the next call.
+          corpus.write.mode("overwrite").format("parquet").saveAsTable(toks)
+          MinHash.membershipsFromSets(
+            corpus, col("doc_id"), col("toks"), numHashes, bands)
+            .write.mode("overwrite").format("parquet").saveAsTable(mem)
+        } finally corpus.unpersist(blocking = false)
     }
-    val corpus = docs(spark, dir).filter(col("doc_id") % 10 =!= 7)
-      .select(col("doc_id"), MinHash.tokenSet(col("text")).as("toks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // Token sets first: a crash between the writes leaves at most a
-      // toks table with no membership table, which the existence check
-      // above rebuilds.
-      corpus.write.mode("overwrite").format("parquet").saveAsTable(toksTab)
-      MinHash.membershipsFromSets(
-        corpus, col("doc_id"), col("toks"), numHashes, bands)
-        .write.mode("overwrite").format("parquet").saveAsTable(memTab)
-      (memTab, toksTab)
-    } finally corpus.unpersist(blocking = false)
+    (memTab, toksTab)
   }
 
   /** C2e': [[c2IncrementalDedup]] answered from the PERSISTED corpus
@@ -674,11 +667,11 @@ object DedupOps {
     // table until compaction — they must never surface as match
     // candidates. Takedown-sized broadcast anti-join; absent table =
     // no deletes = plan unchanged.
-    val cand = tombstones(spark, dedupSuffix(dir, IncHashes, IncBands)) match {
-      case Some(d) => cand0.join(
-        broadcast(d.select(col("doc_id").as("c_id"))), Seq("c_id"), "left_anti")
-      case None => cand0
-    }
+    val tomb = tombstoneTab(dir, IncHashes, IncBands)
+    val cand =
+      if (!spark.catalog.tableExists(tomb)) cand0
+      else cand0.join(broadcast(spark.table(tomb).select(col("doc_id").as("c_id"))),
+        Seq("c_id"), "left_anti")
     graft.util.CacheScope.releaseAfterMaterialize(
       resolveBatch(cand, newBase, spark.table(toksTab), threshold),
       Seq(newBase))
@@ -771,18 +764,6 @@ object DedupOps {
       Seq(assigned))
   }
 
-  /** Append NEW documents to the persisted dedup index — the
-    * maintenance path a growing corpus needs (the
-    * [[graft.queries.SimOps.appendAnnIndex]] posture applied to the LSH
-    * layout): band the day's batch with the SAME hash family and
-    * banding, append its `(doc_id, band, bucket)` memberships AND its
-    * `(doc_id, toks)` token sets, so appended docs are full match
-    * candidates for every later batch check (candidate join and exact
-    * confirm both read the layout). Duplicate ids — against the index
-    * OR within the batch itself — are rejected loudly (an id banded
-    * twice would self-match). Returns the number of appended membership
-    * rows (docs × bands).
-    */
   /** Persisted CC cluster LABELS over the indexed corpus — the third leg
     * of the dedup layout: [[ensureDedupIndex]] gives memberships (the
     * candidate join) and token sets (the confirm); this gives the
@@ -791,24 +772,20 @@ object DedupOps {
     * at ingest (the same O(n·bands) star CC as c2_minhash_cc, over the
     * index banding), PARTITIONED BY `lp = pmod(cluster_rep, 64)` so the
     * incremental maintenance path ([[appendDedupIndex]]) rewrites only
-    * the partitions whose clusters a batch actually touched — dynamic
+    * the partitions whose clusters a batch actually touched — a partial
     * partition overwrite, never an O(n) label rewrite per batch.
     */
   private[graft] def ensureDedupLabels(spark: SparkSession, dir: String,
-      numHashes: Int = IncHashes, bands: Int = IncBands,
-      sweepStale: Boolean = true): String = {
-    import graft.sources.Storage.dropStaleLayouts
-    val (memTab, _) = ensureDedupIndex(spark, dir, numHashes, bands, sweepStale)
-    val suffix = dedupSuffix(dir, numHashes, bands)
-    val labTab = s"graft_mh_lab_$suffix"
-    if (spark.catalog.tableExists(labTab)) return labTab
-    if (sweepStale) dropStaleLayouts(spark, "graft_mh_lab_", suffix)
-    ConnectedComponents.assignmentsFromMemberships(spark.table(memTab))
-      .select(col("doc_id"), col("cluster_rep"),
-        pmod(col("cluster_rep"), lit(64L)).as("lp"))
-      .write.mode("overwrite").format("parquet")
-      .partitionBy("lp").saveAsTable(labTab)
-    labTab
+      numHashes: Int = IncHashes, bands: Int = IncBands): String = {
+    val (memTab, _) = ensureDedupIndex(spark, dir, numHashes, bands)
+    graft.sources.Storage.ensureLayout(spark, Seq("graft_mh_lab_"),
+      dedupSource(dir), dedupParams(numHashes, bands)) { case Seq(labTab) =>
+      ConnectedComponents.assignmentsFromMemberships(spark.table(memTab))
+        .select(col("doc_id"), col("cluster_rep"),
+          pmod(col("cluster_rep"), lit(64L)).as("lp"))
+        .write.mode("overwrite").format("parquet")
+        .partitionBy("lp").saveAsTable(labTab)
+    }.head
   }
 
   /** Union-by-min-rep of a batch against the persisted labels — the
@@ -884,6 +861,18 @@ object DedupOps {
       Seq(batch))
   }
 
+  /** Append NEW documents to the persisted dedup index — the
+    * maintenance path a growing corpus needs (the
+    * [[graft.queries.SimOps.appendAnnIndex]] posture applied to the LSH
+    * layout): band the day's batch with the SAME hash family and
+    * banding, append its `(doc_id, band, bucket)` memberships AND its
+    * `(doc_id, toks)` token sets, so appended docs are full match
+    * candidates for every later batch check (candidate join and exact
+    * confirm both read the layout). Duplicate ids — against the index
+    * OR within the batch itself — are rejected loudly (an id banded
+    * twice would self-match). Returns the number of appended membership
+    * rows (docs × bands).
+    */
   private[graft] def appendDedupIndex(spark: SparkSession, dir: String,
       newDocs: DataFrame, numHashes: Int = IncHashes,
       bands: Int = IncBands): Long = {
@@ -927,7 +916,7 @@ object DedupOps {
         .select(spark.table(memTab).columns.map(col).toIndexedSeq: _*)
         .write.mode("append").insertInto(memTab)
       // Incremental label maintenance: contracted union-by-min-rep, then
-      // DYNAMIC overwrite of only the label partitions a touched cluster
+      // an overwrite of only the label partitions a touched cluster
       // lives in (old rep's partition loses rows, new rep's gains; both
       // are in the touched set). The merge reads memTab post-append, but
       // batch ids contract out of the corpus side automatically — they
@@ -943,48 +932,11 @@ object DedupOps {
         .filter(col("old_rep").isNull || col("old_rep") =!= col("cluster_rep"))
         .select(explode(array(col("lp"), col("old_lp"))).as("p"))
         .filter(col("p").isNotNull).distinct()
-        .collect().map(_.getLong(0))
-      overwriteLabelPartitions(spark, labTab, merged, touchedLp)
+        .collect().map(_.getLong(0)).toSeq
+      graft.sources.Storage.overwritePartitions(spark, labTab, "lp", touchedLp,
+        merged.select(col("doc_id"), col("cluster_rep"), col("lp")))
       nDocs * bands
     } finally base.unpersist(blocking = false)
-  }
-
-  /** Rewrite exactly the `touchedLp` label partitions with the matching
-    * slice of `rows` (the full post-change content of those partitions,
-    * carrying an `lp` column) — the shared write tail of
-    * [[appendDedupIndex]] and [[deleteFromDedupIndex]].
-    *
-    * Dynamic overwrite only rewrites partitions PRESENT in the written
-    * data: a touched partition every one of whose clusters moved to
-    * another partition (its residue class fully VACATED) has no rows, so
-    * its stale labels would survive and a doc would carry two
-    * conflicting reps. Each vacated partition is cleared explicitly with
-    * a STATIC empty overwrite (static INSERT OVERWRITE PARTITION deletes
-    * the partition's files even when the incoming relation is empty).
-    */
-  private def overwriteLabelPartitions(spark: SparkSession, labTab: String,
-      rows: DataFrame, touchedLp: Seq[Long]): Unit = {
-    if (touchedLp.isEmpty) return
-    // Sever lineage from labTab before overwriting it (Spark refuses
-    // to overwrite a table an input of the same plan reads).
-    val writeRows = rows
-      .filter(col("lp").isin(touchedLp.map(Long.box).toIndexedSeq: _*))
-      .select(col("doc_id"), col("cluster_rep"), col("lp"))
-      .localCheckpoint(true)
-    val prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    try {
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      writeRows.write.mode("overwrite").insertInto(labTab)
-    } finally
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    val presentLp =
-      writeRows.select("lp").distinct().collect().map(_.getLong(0)).toSet
-    touchedLp.filterNot(presentLp).foreach { p =>
-      spark.sql(
-        s"INSERT OVERWRITE TABLE $labTab PARTITION (lp=$p) " +
-          "SELECT CAST(NULL AS BIGINT) AS doc_id, " +
-          "CAST(NULL AS BIGINT) AS cluster_rep WHERE false")
-    }
   }
 
   /** Bounded post-takedown relabel pieces shared by the pure query
@@ -1069,8 +1021,8 @@ object DedupOps {
     *     containing a deleted doc are touched — their survivors are
     *     re-CC'd over surviving edges (a delete can SPLIT a cluster) and
     *     exactly the touched `lp` partitions are rewritten, vacated
-    *     partitions cleared (the shared [[overwriteLabelPartitions]]
-    *     machinery).
+    *     partitions dropped
+    *     ([[graft.sources.Storage.overwritePartitions]]).
     *
     * A deleted id stays "present" in the raw membership table until
     * [[compactDedupIndex]] physically drops it, so re-appending a
@@ -1086,7 +1038,6 @@ object DedupOps {
       bands: Int = IncBands): Long = {
     val (memTab, _) = ensureDedupIndex(spark, dir, numHashes, bands)
     val labTab = ensureDedupLabels(spark, dir, numHashes, bands)
-    val suffix = dedupSuffix(dir, numHashes, bands)
     val del = ids.select(col("doc_id")).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -1102,7 +1053,7 @@ object DedupOps {
       // the labels check only AFTER labels are rewritten, so the repair
       // for a mid-delete crash is re-running the delete (the tombstone
       // append below is idempotent via the anti-join).
-      val delTab = tombstoneTab(suffix)
+      val delTab = tombstoneTab(dir, numHashes, bands)
       if (!spark.catalog.tableExists(delTab))
         del.write.mode("overwrite").format("parquet").saveAsTable(delTab)
       else
@@ -1126,9 +1077,8 @@ object DedupOps {
         .filter(col("lp").isin(touchedLp.map(Long.box): _*))
         .join(touchedReps, Seq("cluster_rep"), "left_anti")
         .select(col("doc_id"), col("cluster_rep"), col("lp"))
-      overwriteLabelPartitions(spark, labTab,
-        keepRows.unionByName(newSurv.select("doc_id", "cluster_rep", "lp")),
-        touchedLp)
+      graft.sources.Storage.overwritePartitions(spark, labTab, "lp", touchedLp,
+        keepRows.unionByName(newSurv.select("doc_id", "cluster_rep", "lp")))
       nDel
     } finally del.unpersist(blocking = false)
   }
@@ -1145,8 +1095,7 @@ object DedupOps {
   private[graft] def compactDedupIndex(spark: SparkSession, dir: String,
       numHashes: Int = IncHashes, bands: Int = IncBands): Long = {
     val (memTab, toksTab) = ensureDedupIndex(spark, dir, numHashes, bands)
-    val suffix = dedupSuffix(dir, numHashes, bands)
-    val delTab = tombstoneTab(suffix)
+    val delTab = tombstoneTab(dir, numHashes, bands)
     if (!spark.catalog.tableExists(delTab)) return 0L
     val del = spark.table(delTab).select(col("doc_id")).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -642,7 +642,53 @@ object SimOps {
       adcTopK(corpus, queries, k, subspaces), Seq(base))
   }
 
-  /** Ensure the PERSISTED IVFADC index layout for `dir`'s embeddings
+  /** One persisted IVFADC index configuration: coarse `cells`,
+    * `subspaces`, sub-quantizer width `kSub` and the catalog `role`
+    * prefix its codes/model tables live under. [[AutoCells]] and
+    * [[AutoKSub]] resolve against the corpus when the layout is keyed,
+    * so the name's parameters always match the trained layout. The two
+    * live values are [[AnnIndex.PerQuery]] and [[AnnIndex.Scaled]];
+    * their roles differ, so both coexist on one corpus.
+    */
+  private[graft] final case class AnnIndex(cells: Int, subspaces: Int,
+      kSub: Int, role: String) {
+    private[queries] def resolve(spark: SparkSession, dir: String): AnnIndex =
+      copy(cells = resolveCells(spark, dir, cells),
+        kSub = if (kSub == AutoKSub) scaledKSub(spark, dir) else kSub)
+    private[queries] def roles: Seq[String] = Seq(s"${role}codes_", s"${role}model_")
+    private[queries] def params: String = s"${cells}c${subspaces}s${kSub}k"
+  }
+
+  private[graft] object AnnIndex {
+    /** The per-query ANN operators' index (c3_ann_pq_indexed and the
+      * other c3_ann_* maintenance/monitor queries): 8 subspaces × 16
+      * codes under `graft_ann_*`.
+      */
+    val PerQuery: AnnIndex = AnnIndex(AutoCells, 8, 16, "graft_ann_")
+
+    /** The incremental-semantic family's index (c2_incremental_semantic,
+      * c5_stream_semantic*) under `graft_annk_*`: those operators
+      * resolve a corpus FRACTION (the vec_id % 10 = 7 crawl slice)
+      * against the index, so their confirm cost is O((n/10) · nprobe ·
+      * |cell|) — ≈√n cells bound |cell| ≈ √n and the decade closes
+      * (BASELINE.md round 16) — and the ADC pre-rank needs
+      * [[IncSemSubspaces]] subspaces at the corpus-scaled
+      * [[scaledKSub]] width. Maintained incrementally within a corpus
+      * generation (the ingest loop appends admitted arrivals per
+      * batch); growth that crosses a [[scaledCells]] step arrives as a
+      * corpus regeneration, whose fresh build trains at the new scale —
+      * a √n-cell codebook appended forever without stepping the cell
+      * count would degrade toward the fixed-cell quadratic this layout
+      * exists to avoid.
+      */
+    val Scaled: AnnIndex = AnnIndex(AutoCells, IncSemSubspaces, AutoKSub, "graft_annk_")
+
+    /** [[PerQuery]] with a query builder's explicit parameters. */
+    def perQuery(nCells: Int, subspaces: Int, kSub: Int): AnnIndex =
+      AnnIndex(nCells, subspaces, kSub, PerQuery.role)
+  }
+
+  /** Ensure the PERSISTED IVFADC index layout `ix` for `dir`'s embeddings
     * table; returns (codes table, model table) catalog names.
     *
     * This is the b8 posture applied to ANN: at 100 TB the index is a
@@ -651,102 +697,23 @@ object SimOps {
     * (the on-disk inverted file: each probe touches only its cell's
     * directory), and the model table holds the trained coarse centroids
     * plus per-subspace residual codebooks (nCells + subspaces·kSub tiny
-    * rows — constant in corpus size). Names are keyed by the source
-    * fingerprint (sources.Storage.sourceFingerprint) so a regenerated
-    * corpus gets a fresh index and stale layouts are swept, exactly like
-    * the b8 bucketed tables. Building is idempotent per corpus; Bench
-    * warms it untimed via SparkEntry.warmups.
+    * rows — constant in corpus size). Keyed, built and swept by
+    * [[graft.sources.Storage.ensureLayout]] with the resolved
+    * parameters in the key; Bench warms it untimed via
+    * SparkEntry.warmups.
     */
   private[graft] def ensureAnnIndex(spark: SparkSession, dir: String,
-      nCells: Int = AutoCells, subspaces: Int = 8, kSub: Int = 16,
-      maxSample: Int = 100000, sweepStale: Boolean = true): (String, String) = {
-    import graft.sources.Storage.{dropStaleLayouts, sourceFingerprint}
-    val kC = resolveCells(spark, dir, nCells)
-    // The suffix carries BOTH the corpus fingerprint and the index
-    // hyperparameters: an index trained with different
-    // nCells/subspaces/kSub is not this index — without the params in
-    // the key, a caller asking for e.g. nCells = 32 would silently get
-    // 16-cell codes back and rank them against 32-cell query tables.
-    // Differently-parameterized layouts are swept as stale (one live
-    // configuration per corpus, the b8 posture).
-    val suffix = sourceFingerprint(s"$dir/embeddings.parquet") +
-      s"_${kC}c${subspaces}s${kSub}k"
-    val (codesTab, modelTab) =
-      (s"graft_ann_codes_$suffix", s"graft_ann_model_$suffix")
-    if (spark.catalog.tableExists(codesTab) && spark.catalog.tableExists(modelTab))
-      return (codesTab, modelTab)
-    // sweepStale = false is the side-corpus mode (MaintBench's temp-dir
-    // copies, throwaway spec corpora): build THIS corpus's layout
-    // without dropping another live corpus's — the one-live-
-    // configuration sweep only applies to the real corpus lifecycle.
-    if (sweepStale) {
-      dropStaleLayouts(spark, "graft_ann_codes_", suffix)
-      dropStaleLayouts(spark, "graft_ann_model_", suffix)
+      ix: AnnIndex = AnnIndex.PerQuery, maxSample: Int = 100000): (String, String) = {
+    val r = ix.resolve(spark, dir)
+    val Seq(codesTab, modelTab) = graft.sources.Storage.ensureLayout(spark,
+      r.roles, Seq(s"$dir/embeddings.parquet"), r.params) {
+      case Seq(codes, model) =>
+        writeAnnLayout(spark, emb(spark, dir).select("vec_id", "embedding", "label"),
+          r.cells, r.subspaces, r.kSub, maxSample, model, codes)
     }
-    writeAnnLayout(spark, emb(spark, dir).select("vec_id", "embedding", "label"),
-      kC, subspaces, kSub, maxSample, modelTab, codesTab)
     (codesTab, modelTab)
   }
 
-  /** The PERSISTED index of the incremental-semantic family
-    * (c2_incremental_semantic, c5_stream_semantic) at the CORPUS-SCALED
-    * cell count ([[scaledCells]], ≈ √n): those operators resolve a
-    * corpus FRACTION (the vec_id % 10 = 7 crawl slice) against the
-    * index, so their confirm cost is O((n/10) · nprobe · |cell|) —
-    * under the fixed 16-cell indexed-query layout |cell| grows linearly
-    * and the decade goes quadratic (measured: the sf10-sparse gate blew
-    * past the 500 s watchdog at 16 cells; ≈√n cells bound |cell| ≈ √n
-    * and the decade closes — BASELINE.md round 16). Lives in its OWN
-    * layout namespace (`graft_annk_*`) so it coexists with the fixed-16
-    * layout the per-query ANN operators keep (sweeps are per-prefix;
-    * the b8 one-live-configuration rule holds within each namespace).
-    * Returns (codesTab, modelTab, kCells).
-    *
-    * Maintenance posture: INCREMENTAL within a corpus generation —
-    * [[appendScaledAnnIndex]] / [[deleteFromScaledAnnIndex]] operate on
-    * this namespace (the production ingest loop appends admitted
-    * arrivals' codes per batch, never a per-batch rebuild), and the
-    * layout is additionally rebuilt from scratch whenever the corpus
-    * fingerprint changes. Retrain has no separate surgical form here
-    * BY DESIGN: the cell count itself is a function of corpus size
-    * ([[scaledCells]], a power-of-two step function, so appended
-    * growth within a step keeps |cell| ≈ √n), and once growth crosses
-    * a step the right action is the full rebuild this function already
-    * performs — a √n-cell codebook appended forever without stepping
-    * the cell count degrades toward the fixed-cell quadratic this
-    * layout exists to avoid.
-    */
-  private[graft] def ensureScaledAnnIndex(spark: SparkSession, dir: String,
-      subspaces: Int = IncSemSubspaces, maxSample: Int = 100000,
-      sweepStale: Boolean = true): (String, String, Int) = {
-    import graft.sources.Storage.{dropStaleLayouts, sourceFingerprint}
-    val kCells = scaledCells(spark, dir)
-    // corpus-scaled sub-quantizer width (see [[scaledKSub]]): the ADC
-    // pre-rank consumer needs 8-bit fidelity at scale, and the cell
-    // assignment the unbounded twins read is kSub-independent
-    val kSub = scaledKSub(spark, dir)
-    val suffix = sourceFingerprint(s"$dir/embeddings.parquet") +
-      s"_${kCells}c${subspaces}s${kSub}k"
-    val (codesTab, modelTab) =
-      (s"graft_annk_codes_$suffix", s"graft_annk_model_$suffix")
-    if (spark.catalog.tableExists(codesTab) && spark.catalog.tableExists(modelTab))
-      return (codesTab, modelTab, kCells)
-    if (sweepStale) {
-      dropStaleLayouts(spark, "graft_annk_codes_", suffix)
-      dropStaleLayouts(spark, "graft_annk_model_", suffix)
-    }
-    writeAnnLayout(spark, emb(spark, dir).select("vec_id", "embedding", "label"),
-      kCells, subspaces, kSub, maxSample, modelTab, codesTab)
-    (codesTab, modelTab, kCells)
-  }
-
-  /** Train a fresh codebook on `corpus`'s bounded sample, encode the
-    * corpus, and land the (model, codes) tables under the given names —
-    * the one layout-building pass shared by [[ensureAnnIndex]] (initial
-    * build) and [[retrainAnnIndex]] (staging build before the swap).
-    * Model first: a crash between the writes leaves at most a model
-    * with no codes table, which existence checks treat as absent.
-    */
   /** (Over)write a model table from a (coarse, books) pair — the
     * one model-landing pass shared by [[writeAnnLayout]] and
     * [[splitAnnCell]]'s stranded-slot rewrite. Overwrite of a tiny
@@ -764,6 +731,13 @@ object SimOps {
       .write.mode("overwrite").format("parquet").saveAsTable(modelTab)
   }
 
+  /** Train a fresh codebook on `corpus`'s bounded sample, encode the
+    * corpus, and land the (model, codes) tables under the given names —
+    * the one layout-building pass shared by [[ensureAnnIndex]] (initial
+    * build) and [[retrainAnnIndex]] (staging build before the swap).
+    * Model first: a crash between the writes leaves at most a model
+    * with no codes table, which existence checks treat as absent.
+    */
   private def writeAnnLayout(spark: SparkSession, corpus: DataFrame,
       nCells: Int, subspaces: Int, kSub: Int, maxSample: Int,
       modelTab: String, codesTab: String): Unit = {
@@ -801,9 +775,10 @@ object SimOps {
     * corpus).
     *
     * Crash ordering: leftover staging tables from a crashed retrain are
-    * dropped up front (and also swept as stale by the next corpus's
-    * ensure); a crash after the live drop but before a rename leaves no
-    * live layout, which the next ensureAnnIndex detects and rebuilds —
+    * dropped up front (and also swept as stale by the next corpus
+    * generation's ensure); a crash after the live drop but before a
+    * rename leaves no live layout, which the next ensureAnnIndex
+    * detects and rebuilds —
     * never a half-swapped layout serving one table from each
     * generation, because the model is renamed before the codes and
     * existence checks require BOTH.
@@ -826,12 +801,9 @@ object SimOps {
       extraVectors: Option[DataFrame] = None, nCells: Int = AutoCells,
       subspaces: Int = 8, kSub: Int = 16,
       maxSample: Int = 100000): (String, String) = {
-    import graft.sources.Storage.sourceFingerprint
-    val kC = resolveCells(spark, dir, nCells)
-    val suffix = sourceFingerprint(s"$dir/embeddings.parquet") +
-      s"_${kC}c${subspaces}s${kSub}k"
-    val (codesTab, modelTab) =
-      (s"graft_ann_codes_$suffix", s"graft_ann_model_$suffix")
+    val r = AnnIndex.perQuery(nCells, subspaces, kSub).resolve(spark, dir)
+    val Seq(codesTab, modelTab) = graft.sources.Storage.layoutNames(
+      r.roles, Seq(s"$dir/embeddings.parquet"), r.params)
     val (stCodes, stModel) = (s"${codesTab}_rt", s"${modelTab}_rt")
     spark.sql(s"DROP TABLE IF EXISTS $stCodes")
     spark.sql(s"DROP TABLE IF EXISTS $stModel")
@@ -840,7 +812,7 @@ object SimOps {
       case Some(x) => live.unionByName(x.select("vec_id", "embedding", "label"))
       case None => live
     }
-    writeAnnLayout(spark, grown, kC, subspaces, kSub, maxSample,
+    writeAnnLayout(spark, grown, r.cells, subspaces, kSub, maxSample,
       stModel, stCodes)
     spark.sql(s"DROP TABLE IF EXISTS $modelTab")
     spark.sql(s"DROP TABLE IF EXISTS $codesTab")
@@ -855,17 +827,6 @@ object SimOps {
     (codesTab, modelTab)
   }
 
-  /** C3h: [[c3AnnPq]] answered from the PERSISTED index — the query path
-    * reads the (cell, codes) table and the model table with ZERO train or
-    * encode stages over the corpus (pinned in PlanAuditSpec): the only
-    * corpus-sized input is the codes scan, and the only embeddings scan
-    * is the query subset (its `vec_id % queryMod` filter reaches the
-    * parquet reader). Results are identical to c3_ann_pq by construction
-    * — training is deterministic and the stored codes come from the same
-    * encode expressions — so it shares c3_ann_pq's dynamic oracle SQL.
-    * The model read collects nCells + subspaces·kSub tiny rows (constant
-    * in corpus size), the same driver-side bound as training's sample.
-    */
   /** Load the trained coarse centroids + residual codebooks back from a
     * persisted model table (nCells + subspaces·kSub tiny rows — the
     * bounded driver-side collect of the index design). Shared by the
@@ -890,53 +851,33 @@ object SimOps {
   private[graft] def scaledPqModelArrays(spark: SparkSession, dir: String,
       subspaces: Int = IncSemSubspaces)
       : (Array[Array[Double]], Array[Array[Array[Double]]]) = {
-    val (_, modelTab, _) = ensureScaledAnnIndex(spark, dir, subspaces)
+    val (_, modelTab) =
+      ensureAnnIndex(spark, dir, AnnIndex.Scaled.copy(subspaces = subspaces))
     val (coarse, books) = loadPqModel(spark, modelTab, subspaces)
     (coarse.map(_.toArray).toArray, books.map(_.map(_.toArray).toArray).toArray)
   }
 
-  /** Append NEW vectors to the persisted IVFADC index — the maintenance
-    * path a growing corpus needs: at 100 TB the index is ingested
-    * incrementally (encode the day's new vectors with the STORED model,
-    * append their (cell, codes) rows to the inverted file), not
-    * retrained per batch — retraining cadence is a separate, rarer
-    * decision, exactly as in the published IVFADC deployments. The
+  /** Append NEW vectors to the persisted IVFADC index `ix` — the
+    * maintenance path a growing corpus needs: at 100 TB the index is
+    * ingested incrementally (encode the day's new vectors with the
+    * STORED model, append their (cell, codes) rows to the inverted
+    * file), not retrained per batch — retraining cadence is a separate,
+    * rarer decision, exactly as in the published IVFADC deployments.
+    * For [[AnnIndex.Scaled]] this is the production ingest loop of the
+    * semantic gates: admitted-novel arrivals are appended so the NEXT
+    * batch resolves against them without a per-batch rebuild. The
     * encode goes through the same [[pqEncodeCorpus]] / [[PqEncExprs]]
     * expressions as the original build, so appended codes are
     * bit-identical to what a from-scratch encode with this model would
     * produce (spec-pinned in SimOpsSpec). Duplicate ids are rejected
     * loudly — an id already in the index would silently rank twice.
-    * Returns the number of appended rows.
+    * Filterable metadata (label) is stored inline. Returns the number
+    * of appended rows.
     */
   private[graft] def appendAnnIndex(spark: SparkSession, dir: String,
-      newVectors: DataFrame, nCells: Int = AutoCells, subspaces: Int = 8,
-      kSub: Int = 16): Long = {
-    val (codesTab, modelTab) = ensureAnnIndex(spark, dir, nCells, subspaces, kSub)
-    appendToLayout(spark, codesTab, modelTab, newVectors, subspaces)
-  }
-
-  /** [[appendAnnIndex]] for the SCALED layout (`graft_annk_*`) the
-    * incremental-semantic gates read — the production ingest loop's
-    * maintenance path: admitted-novel arrivals are encoded with the
-    * STORED scaled model and appended to the √n-cell inverted file, so
-    * the NEXT batch resolves against them without a per-batch rebuild
-    * (the round-17 verdict's #1 ask; rebuild cadence remains a
-    * separate, rarer retrain decision — see [[ensureScaledAnnIndex]]).
-    */
-  private[graft] def appendScaledAnnIndex(spark: SparkSession, dir: String,
-      newVectors: DataFrame, subspaces: Int = IncSemSubspaces): Long = {
-    val (codesTab, modelTab, _) = ensureScaledAnnIndex(spark, dir, subspaces)
-    appendToLayout(spark, codesTab, modelTab, newVectors, subspaces)
-  }
-
-  /** Layout-generic append shared by the fixed (`graft_ann_*`) and
-    * scaled (`graft_annk_*`) namespaces — see [[appendAnnIndex]] for
-    * the contract (stored-model encode bit-identity, loud duplicate
-    * rejection, inline label metadata).
-    */
-  private def appendToLayout(spark: SparkSession, codesTab: String,
-      modelTab: String, newVectors: DataFrame, subspaces: Int): Long = {
-    val (coarse, books) = loadPqModel(spark, modelTab, subspaces)
+      newVectors: DataFrame, ix: AnnIndex = AnnIndex.PerQuery): Long = {
+    val (codesTab, modelTab) = ensureAnnIndex(spark, dir, ix)
+    val (coarse, books) = loadPqModel(spark, modelTab, ix.subspaces)
     val base = newVectors
       .select(col("vec_id"), asDouble(col("embedding")).as("embD"))
     val dup = spark.table(codesTab).select(col("b_id"))
@@ -948,7 +889,7 @@ object SimOps {
     require(newVectors.columns.contains("label"),
       "appendAnnIndex: new vectors must carry the label attribute — the " +
         "codes table stores filterable metadata inline")
-    val enc = pqEncodeCorpus(base, coarse, books, subspaces, residual = true)
+    val enc = pqEncodeCorpus(base, coarse, books, ix.subspaces, residual = true)
       .join(newVectors.select(col("vec_id").as("b_id"), col("label")), "b_id")
     val n = enc.count()
     // insertInto is positional — align to the table's physical column
@@ -958,46 +899,26 @@ object SimOps {
     n
   }
 
-  /** Remove vectors from the persisted IVFADC index — the other half of
-    * the maintenance lifecycle a growing corpus needs (GDPR erasure,
-    * retention expiry, recalled documents): without a remove path the
-    * layout drifts from the corpus it serves and deleted vectors keep
-    * ranking in every search. Physical deletion, not a tombstone: the
-    * inverted file is cell-partitioned, so only the cell partitions
-    * that actually CONTAIN a deleted id are rewritten (dynamic
-    * partition overwrite — O(affected cells · cell size), never a full
-    * index rewrite; a cell emptied entirely is dropped via its
-    * partition). A tombstone side-table would leave query cost and a
-    * join on every search; rewriting a few bounded cells at delete time
-    * is the cheaper end of that trade at any scale. The model table is
+  /** Remove vectors from the persisted IVFADC index `ix` — the other
+    * half of the maintenance lifecycle a growing corpus needs (GDPR
+    * erasure, retention expiry, recalled documents): without a remove
+    * path the layout drifts from the corpus it serves and deleted
+    * vectors keep ranking in every search. Physical deletion, not a
+    * tombstone: the inverted file is cell-partitioned, so only the cell
+    * partitions that actually CONTAIN a deleted id are rewritten
+    * ([[graft.sources.Storage.overwritePartitions]] — O(affected cells ·
+    * cell size), never a full index rewrite; a cell emptied entirely is
+    * dropped). A tombstone side-table would leave query cost and a join
+    * on every search; rewriting a few bounded cells at delete time is
+    * the cheaper end of that trade at any scale. The model table is
     * untouched — codebooks are trained on a sample and retrain cadence
-    * is a separate decision (same stance as [[appendAnnIndex]]).
-    * Ids not present in the index are ignored (idempotent). Returns the
-    * number of removed rows.
+    * is a separate decision (same stance as [[appendAnnIndex]]). Ids not
+    * present in the index are ignored (idempotent). Returns the number
+    * of removed rows.
     */
   private[graft] def deleteFromAnnIndex(spark: SparkSession, dir: String,
-      ids: Seq[Long], nCells: Int = AutoCells, subspaces: Int = 8,
-      kSub: Int = 16): Long = {
-    val (codesTab, _) = ensureAnnIndex(spark, dir, nCells, subspaces, kSub)
-    deleteFromLayout(spark, codesTab, ids)
-  }
-
-  /** [[deleteFromAnnIndex]] for the SCALED layout (`graft_annk_*`) —
-    * erasure/retention removal on the index the semantic gates read,
-    * same cell-pruned dynamic-partition rewrite.
-    */
-  private[graft] def deleteFromScaledAnnIndex(spark: SparkSession, dir: String,
-      ids: Seq[Long], subspaces: Int = IncSemSubspaces): Long = {
-    val (codesTab, _, _) = ensureScaledAnnIndex(spark, dir, subspaces)
-    deleteFromLayout(spark, codesTab, ids)
-  }
-
-  /** Layout-generic delete shared by both namespaces — see
-    * [[deleteFromAnnIndex]] for the contract (physical cell-partition
-    * rewrite of only the affected cells, idempotent on absent ids).
-    */
-  private def deleteFromLayout(spark: SparkSession, codesTab: String,
-      ids: Seq[Long]): Long = {
+      ids: Seq[Long], ix: AnnIndex = AnnIndex.PerQuery): Long = {
+    val (codesTab, _) = ensureAnnIndex(spark, dir, ix)
     val session = spark
     import session.implicits._
     val idsDf = ids.toDF("b_id")
@@ -1009,44 +930,11 @@ object SimOps {
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     if (affected.isEmpty) return 0L
     val cellList = affected.keys.toSeq
-    val survivors = codes
-      .filter(col("cell").isin(cellList: _*))
-      .join(broadcast(idsDf), Seq("b_id"), "left_anti")
-    // Spark refuses to overwrite a table it is reading in the same plan,
-    // so the surviving rows of the affected cells stage through a temp
-    // dir (two passes over ONLY those cells), then land via dynamic
-    // partition overwrite.
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ann_del").toString
-    try {
-      survivors.write.mode("overwrite").parquet(tmp)
-      val back = spark.read.parquet(tmp)
-      // one distinct pass over the staged cells, not one job per cell
-      val stillPresent = back.select(col("cell").cast("int")).distinct()
-        .collect().map(_.getInt(0)).toSet
-      val emptied = cellList.filterNot(stillPresent)
-      val prevMode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try {
-        // Dynamic overwrite only touches partitions present in the data,
-        // so a fully-emptied cell must be dropped explicitly — and it is
-        // dropped BEFORE the overwrite: a crash between the two steps
-        // then leaves some cells still holding their pre-delete rows
-        // (the delete simply has not happened there yet and a retry
-        // re-applies it), never the half-applied state where the
-        // overwrite landed but an emptied cell still serves its deleted
-        // vectors as ghost rankings.
-        emptied.foreach(c => spark.sql(
-          s"ALTER TABLE $codesTab DROP IF EXISTS PARTITION (cell=$c)"))
-        back.select(codes.columns.map(col).toIndexedSeq: _*)
-          .write.mode("overwrite").insertInto(codesTab)
-      } finally prevMode match {
-        case Some(m) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", m)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-      spark.catalog.refreshTable(codesTab)
-      affected.values.sum
-    } finally
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
+    graft.sources.Storage.overwritePartitions(spark, codesTab, "cell",
+      cellList.map(_.toLong),
+      codes.filter(col("cell").isin(cellList: _*))
+        .join(broadcast(idsDf), Seq("b_id"), "left_anti"))
+    affected.values.sum
   }
 
   /** C3p: ANN CELL-BALANCE monitor — the scan-cost counterpart of the
@@ -1069,7 +957,8 @@ object SimOps {
     */
   def c3AnnCells(spark: SparkSession, dir: String, nCells: Int = AutoCells,
       subspaces: Int = 8, kSub: Int = 16): DataFrame = {
-    val (codesTab, modelTab) = ensureAnnIndex(spark, dir, nCells, subspaces, kSub)
+    val (codesTab, modelTab) =
+      ensureAnnIndex(spark, dir, AnnIndex.perQuery(nCells, subspaces, kSub))
     // the uniform target is vs the TRAINED cell count (a tiny corpus
     // trains fewer cells than requested; a split appends one)
     val nTrained = loadPqModel(spark, modelTab, subspaces)._1.length
@@ -1101,35 +990,14 @@ object SimOps {
     * [[splitAnnCell]]'s step (3) and its pending-split completion.
     * Deterministic and idempotent (a re-run recomputes the same
     * stay-half); a fully-emptied cell is dropped via its partition.
-    * Stages through a temp dir because Spark refuses to overwrite a
-    * table it reads in the same plan (the [[deleteFromAnnIndex]]
-    * machinery, single-cell form).
     */
   private def overwriteCellWithout(spark: SparkSession, codesTab: String,
-      cell: Int, removeIds: DataFrame): Unit = {
-    val stay = spark.table(codesTab)
-      .filter(col("cell").cast("int") === cell)
-      .join(removeIds.select(col("b_id")), Seq("b_id"), "left_anti")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ann_split").toString
-    try {
-      stay.write.mode("overwrite").parquet(tmp)
-      val back = spark.read.parquet(tmp)
-      val prevMode = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try {
-        if (back.isEmpty)
-          spark.sql(s"ALTER TABLE $codesTab DROP IF EXISTS PARTITION (cell=$cell)")
-        else
-          back.select(spark.table(codesTab).columns.map(col).toIndexedSeq: _*)
-            .write.mode("overwrite").insertInto(codesTab)
-      } finally prevMode match {
-        case Some(m) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", m)
-        case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-      spark.catalog.refreshTable(codesTab)
-    } finally
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(tmp))
-  }
+      cell: Int, removeIds: DataFrame): Unit =
+    graft.sources.Storage.overwritePartitions(spark, codesTab, "cell",
+      Seq(cell.toLong),
+      spark.table(codesTab)
+        .filter(col("cell").cast("int") === cell)
+        .join(removeIds.select(col("b_id")), Seq("b_id"), "left_anti"))
 
   /** SPLIT one oversized coarse cell of the persisted IVFADC index —
     * the surgical rebalance action the [[c3AnnCells]] verdict triggers
@@ -1157,8 +1025,8 @@ object SimOps {
     * (3) runs, a moved member ranks from both cells (duplicate
     * candidacy, never a wrong distance: both encodings decode against
     * their own cell's centroid); (3) the split cell's partition is
-    * overwritten with its stay-half (the [[deleteFromAnnIndex]]
-    * dynamic-partition machinery).
+    * overwritten with its stay-half (the
+    * [[graft.sources.Storage.overwritePartitions]] machinery).
     *
     * Crash recovery — RE-INVOKING splitAnnCell repairs every window
     * (a retry is the recovery procedure; there is no separate entry
@@ -1195,7 +1063,8 @@ object SimOps {
       cell: Int, extraVectors: Option[DataFrame] = None, nCells: Int = AutoCells,
       subspaces: Int = 8, kSub: Int = 16, maxSample: Int = 100000,
       crashAfterStep: Int = 0): Long = {
-    val (codesTab, modelTab) = ensureAnnIndex(spark, dir, nCells, subspaces, kSub)
+    val (codesTab, modelTab) =
+      ensureAnnIndex(spark, dir, AnnIndex.perQuery(nCells, subspaces, kSub))
     val (coarse, books) = loadPqModel(spark, modelTab, subspaces)
     require(cell >= 1 && cell <= coarse.length,
       s"splitAnnCell: cell $cell outside the codebook (1..${coarse.length})")
@@ -1311,11 +1180,22 @@ object SimOps {
     } finally members.unpersist(blocking = false)
   }
 
+  /** C3h: [[c3AnnPq]] answered from the PERSISTED index — the query path
+    * reads the (cell, codes) table and the model table with ZERO train or
+    * encode stages over the corpus (pinned in PlanAuditSpec): the only
+    * corpus-sized input is the codes scan, and the only embeddings scan
+    * is the query subset (its `vec_id % queryMod` filter reaches the
+    * parquet reader). Results are identical to c3_ann_pq by construction
+    * — training is deterministic and the stored codes come from the same
+    * encode expressions — so it shares c3_ann_pq's dynamic oracle SQL.
+    * The model read collects nCells + subspaces·kSub tiny rows (constant
+    * in corpus size), the same driver-side bound as training's sample.
+    */
   def c3AnnPqIndexed(spark: SparkSession, dir: String, k: Int = 5,
       nCells: Int = AutoCells, nprobe: Int = 4, subspaces: Int = 8, kSub: Int = 16,
       queryMod: Int = 100): DataFrame = {
     val (codesTab, modelTab) =
-      ensureAnnIndex(spark, dir, nCells, subspaces, kSub)
+      ensureAnnIndex(spark, dir, AnnIndex.perQuery(nCells, subspaces, kSub))
     val (coarse, books) = loadPqModel(spark, modelTab, subspaces)
     val queries = pqQueryTables(
       emb(spark, dir).select(col("vec_id"), asDouble(col("embedding")).as("embD")),
@@ -1341,7 +1221,7 @@ object SimOps {
       nCells: Int = AutoCells, nprobe: Int = 4, subspaces: Int = 8, kSub: Int = 16,
       queryMod: Int = 100): DataFrame = {
     val (codesTab, modelTab) =
-      ensureAnnIndex(spark, dir, nCells, subspaces, kSub)
+      ensureAnnIndex(spark, dir, AnnIndex.perQuery(nCells, subspaces, kSub))
     val (coarse, books) = loadPqModel(spark, modelTab, subspaces)
     val queries = pqQueryTables(
       emb(spark, dir).select(col("vec_id"), asDouble(col("embedding")).as("embD")),
@@ -1374,7 +1254,7 @@ object SimOps {
       nCells: Int = AutoCells, nprobe: Int = 4, subspaces: Int = 8, kSub: Int = 16,
       queryMod: Int = 100): DataFrame = {
     val (codesTab, modelTab) =
-      ensureAnnIndex(spark, dir, nCells, subspaces, kSub)
+      ensureAnnIndex(spark, dir, AnnIndex.perQuery(nCells, subspaces, kSub))
     val (coarse, books) = loadPqModel(spark, modelTab, subspaces)
     val base = emb(spark, dir)
       .select(col("vec_id"), asDouble(col("embedding")).as("embD"))
@@ -1794,20 +1674,6 @@ object SimOps {
       resolveCells(spark, dir, nCells), iters = 5)
   }
 
-  /** Corpus-scaled cell count for the EVERY-vector-is-a-query operators
-    * (c3_knn_join, c2_semantic_dedup): the smallest power of two ≥ √n,
-    * floored at 16. Their within-cell blocking cost is O(Σ|cell|²) =
-    * O(n²/k) under uniform cells, so a FIXED k turns the 10× corpus
-    * decade into ~100×/k per cell — the measured 8.7× sf1 decade at the
-    * old fixed 16. Growing k ≈ √n keeps expected |cell| ≈ √n and total
-    * pairs O(n·√n̄) — the published SemDeDup posture, now code rather
-    * than prose. Power-of-two grid: the count is a stable step function
-    * of n (a few appended docs don't retrain a different codebook), and
-    * the dynamic oracle calls this same function so it replays the
-    * identical codebook. The query-subset ANN operators keep their
-    * fixed coarse codebook (their cost is per-query, not per-pair, and
-    * the persisted-index fingerprint keys on the cell count).
-    */
   /** Sentinel default of every `nCells` parameter in the ANN family:
     * 0 = "corpus-scaled" — resolved to [[scaledCells]] (≈√n, the
     * power-of-two grid) by [[resolveCells]] at the functions that
@@ -1822,10 +1688,29 @@ object SimOps {
     */
   private[graft] val AutoCells = 0
 
+  /** Sentinel `kSub` of [[AnnIndex.Scaled]]: resolved to [[scaledKSub]]
+    * when the layout is keyed.
+    */
+  private[graft] val AutoKSub = 0
+
   private[graft] def resolveCells(spark: SparkSession, dir: String,
       nCells: Int): Int =
     if (nCells == AutoCells) scaledCells(spark, dir) else nCells
 
+  /** Corpus-scaled cell count for the EVERY-vector-is-a-query operators
+    * (c3_knn_join, c2_semantic_dedup): the smallest power of two ≥ √n,
+    * floored at 16. Their within-cell blocking cost is O(Σ|cell|²) =
+    * O(n²/k) under uniform cells, so a FIXED k turns the 10× corpus
+    * decade into ~100×/k per cell — the measured 8.7× sf1 decade at the
+    * old fixed 16. Growing k ≈ √n keeps expected |cell| ≈ √n and total
+    * pairs O(n·√n̄) — the published SemDeDup posture, now code rather
+    * than prose. Power-of-two grid: the count is a stable step function
+    * of n (a few appended docs don't retrain a different codebook), and
+    * the dynamic oracle calls this same function so it replays the
+    * identical codebook. The query-subset ANN operators keep their
+    * fixed coarse codebook (their cost is per-query, not per-pair, and
+    * the persisted-index fingerprint keys on the cell count).
+    */
   private[graft] def scaledCells(spark: SparkSession, dir: String): Int = {
     val n = corpusVecCount(spark, dir)
     val target = math.ceil(math.sqrt(n.toDouble)).toLong
@@ -1866,7 +1751,7 @@ object SimOps {
     * c2_semantic_dedup) and the dynamic oracle, and an uncached count()
     * there is a full extra corpus scan per timed run that also skews
     * the per-query shuffle/time record. The fingerprint key (file list
-    * + sizes + mtimes, the ensureAnnIndex pattern) means a regenerated
+    * + sizes + mtimes, the layout-key pattern) means a regenerated
     * corpus recounts while repeat runs don't.
     */
   private val vecCountCache =
@@ -2144,7 +2029,7 @@ object SimOps {
         "FROM s ORDER BY cell"
     // Incremental-semantic replay: the stored SCALED codebook (≈√n
     // cells — the same [[scaledCells]] grid the engine's
-    // ensureScaledAnnIndex trains, identical by training determinism)
+    // AnnIndex.Scaled trains, identical by training determinism)
     // as a literal, corpus assignment (minus the batch slice), the
     // batch's nprobe=4 probe cells via the same sorted-(dist, cell)
     // slice as the ANN queries, exact-cosine confirm on candidates
@@ -2178,7 +2063,7 @@ object SimOps {
         "WHERE d.vec_id % 10 = 7 ORDER BY vec_id"
     // Bounded (_topc) incremental-semantic replay: the scaled codebook
     // AND its residual books as literals (retrained here exactly as
-    // ensureScaledAnnIndex does — the require below pins the identity),
+    // AnnIndex.Scaled does — the require below pins the identity),
     // corpus residual codes, per-arrival probe tables, round-6 ADC, the
     // GLOBAL top-c cut by (adc, b_id) — equal to the engine's per-cell
     // cut + global window because the global top-c is a subset of the
@@ -2460,10 +2345,10 @@ object SimOps {
     *    codebook the index was built with — loadPqModel), and
     *    candidates are the codes table's rows for those cells — a
     *    cell-partition-PRUNED scan of (id, cell) pairs, never a corpus
-    *    embedding scan (the scaled `graft_annk_*` layout carries its
-    *    own append/delete lifecycle — [[appendScaledAnnIndex]] /
-    *    [[deleteFromScaledAnnIndex]] — so the ingest loop feeds
-    *    admitted arrivals back without a per-batch rebuild);
+    *    embedding scan (the [[AnnIndex.Scaled]] layout carries the
+    *    append/delete lifecycle — [[appendAnnIndex]] /
+    *    [[deleteFromAnnIndex]] — so the ingest loop feeds admitted
+    *    arrivals back without a per-batch rebuild);
     *  - only candidates pay the exact-cosine confirm (corpus embeddings
     *    re-attached by id — O(batch · nprobe · cell), bounded), and the
     *    best pick is one partial aggregate, no window.
@@ -2478,8 +2363,9 @@ object SimOps {
       subspaces: Int = IncSemSubspaces): DataFrame = {
     // the SCALED index (≈√n cells): the batch is a corpus fraction, so
     // the fixed-16 layout's linearly-growing cells turn the confirm
-    // join quadratic — see [[ensureScaledAnnIndex]]
-    val (codesTab, modelTab, _) = ensureScaledAnnIndex(spark, dir, subspaces)
+    // join quadratic — see [[AnnIndex.Scaled]]
+    val (codesTab, modelTab) =
+      ensureAnnIndex(spark, dir, AnnIndex.Scaled.copy(subspaces = subspaces))
     val (coarse, _) = loadPqModel(spark, modelTab, subspaces)
     val nTrained = coarse.length
     val base = emb(spark, dir)
@@ -2546,7 +2432,8 @@ object SimOps {
       subspaces: Int = IncSemSubspaces): DataFrame = {
     // the SCALED index — the arrival stream is a corpus fraction, the
     // same quadratic-at-fixed-cells argument as the batch twin
-    val (codesTab, modelTab, _) = ensureScaledAnnIndex(spark, dir, subspaces)
+    val (codesTab, modelTab) =
+      ensureAnnIndex(spark, dir, AnnIndex.Scaled.copy(subspaces = subspaces))
     val (coarse, _) = loadPqModel(spark, modelTab, subspaces)
     val nTrained = coarse.length
     val probed = arrivals
@@ -2683,7 +2570,8 @@ object SimOps {
       arrivals: DataFrame, nprobe: Int = 4,
       subspaces: Int = IncSemSubspaces, excludeMod: Int = 10,
       excludeRem: Int = 7): DataFrame = {
-    val (codesTab, modelTab, _) = ensureScaledAnnIndex(spark, dir, subspaces)
+    val (codesTab, modelTab) =
+      ensureAnnIndex(spark, dir, AnnIndex.Scaled.copy(subspaces = subspaces))
     val (coarse, books) = loadPqModel(spark, modelTab, subspaces)
     val nTrained = coarse.length
     // Probe side, round-18 shape (guide §1.2 step 2 after step 1):
@@ -2776,7 +2664,7 @@ object SimOps {
         col("s.adc").as("adc"), col("s.b_id").as("b_id"))
     // The exact-cosine confirm re-attaches candidate embeddings BY ID
     // from the corpus parquet; vectors ingested via
-    // [[appendScaledAnnIndex]] live outside it, so callers resolving
+    // [[appendAnnIndex]] live outside it, so callers resolving
     // against appended postings re-attach them through `extraVectors`
     // (the retrainAnnIndex / splitAnnCell contract).
     val corpusEmb = emb(spark, dir)
@@ -2837,7 +2725,7 @@ object SimOps {
     * rows, exact-cosine confirm, best surviving pick. `extraVectors`
     * re-attaches raw embeddings for index postings that live outside
     * the corpus parquet (vectors ingested via
-    * [[appendScaledAnnIndex]]) — the composed ingest-then-resolve
+    * [[appendAnnIndex]]) — the composed ingest-then-resolve
     * loop: resolve batch N, append its admitted novels, resolve batch
     * N+1 against them.
     */

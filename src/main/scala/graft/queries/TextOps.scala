@@ -1123,35 +1123,31 @@ object TextOps {
     * closed-form one-pass trainer (no iteration, no matrix inversion,
     * nothing order-dependent). Idempotent; returns the model table name.
     */
-  private[graft] def ensureQualityModel(spark: SparkSession, dir: String): String = {
-    import graft.sources.Storage.{dropStaleLayouts, sourceFingerprint}
-    val suffix = sourceFingerprint(s"$dir/documents.parquet")
-    val tab = s"graft_qm_$suffix"
-    if (spark.catalog.tableExists(tab)) return tab
-    dropStaleLayouts(spark, "graft_qm_", suffix)
-    val agg = qmFeatures(docs(spark, dir))
-      .groupBy("rule_keep")
-      .agg(count(lit(1)).as("cnt"), QmFeatures.map(n => sum(col(n)).as(n)): _*)
-      .collect()
-    require(agg.length == 2,
-      "quality-model training needs both keep and drop examples in the corpus")
-    def mus(keep: Boolean): Map[String, Double] = {
-      val r = agg.find(_.getBoolean(0) == keep).get
-      val cnt = r.getLong(1)
-      QmFeatures.zipWithIndex.map { case (n, i) =>
-        // same rounding as round(col, 6): HALF_UP on the IEEE quotient
-        n -> BigDecimal(r.getLong(i + 2).toDouble / cnt)
-          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      }.toMap
-    }
-    val (mk, md) = (mus(true), mus(false))
-    val session = spark
-    import session.implicits._
-    QmFeatures.map(n => (n, mk(n), md(n), mk(n) - md(n)))
-      .toDF("feature", "mu_keep", "mu_drop", "w")
-      .write.mode("overwrite").format("parquet").saveAsTable(tab)
-    tab
-  }
+  private[graft] def ensureQualityModel(spark: SparkSession, dir: String): String =
+    graft.sources.Storage.ensureLayout(spark, Seq("graft_qm_"),
+      Seq(s"$dir/documents.parquet")) { case Seq(tab) =>
+      val agg = qmFeatures(docs(spark, dir))
+        .groupBy("rule_keep")
+        .agg(count(lit(1)).as("cnt"), QmFeatures.map(n => sum(col(n)).as(n)): _*)
+        .collect()
+      require(agg.length == 2,
+        "quality-model training needs both keep and drop examples in the corpus")
+      def mus(keep: Boolean): Map[String, Double] = {
+        val r = agg.find(_.getBoolean(0) == keep).get
+        val cnt = r.getLong(1)
+        QmFeatures.zipWithIndex.map { case (n, i) =>
+          // same rounding as round(col, 6): HALF_UP on the IEEE quotient
+          n -> BigDecimal(r.getLong(i + 2).toDouble / cnt)
+            .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+        }.toMap
+      }
+      val (mk, md) = (mus(true), mus(false))
+      val session = spark
+      import session.implicits._
+      QmFeatures.map(n => (n, mk(n), md(n), mk(n) - md(n)))
+        .toDF("feature", "mu_keep", "mu_drop", "w")
+        .write.mode("overwrite").format("parquet").saveAsTable(tab)
+    }.head
 
   /** C4u: MODEL-BASED quality scoring — the classifier-shaped companion
     * to the rule gate (`c7_quality_filter`): a deterministic linear
@@ -1295,11 +1291,12 @@ object TextOps {
 
   /** Train-and-persist the REFERENCE n-gram model (the BPE-vocab /
     * quality-model layout posture): unigram, bigram and trigram count
-    * tables plus the (T, V) scalars over the rule-keep slice, keyed by
-    * corpus fingerprint so a regenerated corpus retrains and stale
-    * layouts sweep. One tokenized pass feeds all four writes. Shared by
-    * every reference-model consumer (c4_lm_ppl_ref, c4_lm_ppl3,
-    * c7_ppl_filter) — trained once per corpus, the production shape;
+    * tables plus the (T, V) scalars over the rule-keep slice, one
+    * [[graft.sources.Storage.ensureLayout]] layout, so a regenerated
+    * corpus retrains and stale layouts sweep. One tokenized pass feeds
+    * all four writes. Shared by every reference-model consumer
+    * (c4_lm_ppl_ref, c4_lm_ppl3, c7_ppl_filter) — trained once per
+    * corpus, the production shape;
     * Bench warms it untimed (cost recorded in BASELINE.md). The
     * self-scored c4_lm_ppl keeps training IN-QUERY: the train loop is
     * that query's subject, the c4_bpe_merges precedent.
@@ -1307,47 +1304,41 @@ object TextOps {
     */
   private[graft] def ensureLmRefModel(spark: SparkSession, dir: String)
       : (String, String, String, String) = {
-    import graft.sources.Storage.{dropStaleLayouts, sourceFingerprint}
-    val fp = sourceFingerprint(s"$dir/documents.parquet")
-    val (unTab, bgTab, tgTab, tvTab) =
-      (s"graft_lm1_$fp", s"graft_lm2_$fp", s"graft_lm3_$fp", s"graft_lmtv_$fp")
-    if (Seq(unTab, bgTab, tgTab, tvTab).forall(spark.catalog.tableExists))
-      return (unTab, bgTab, tgTab, tvTab)
-    Seq("graft_lm1_", "graft_lm2_", "graft_lm3_", "graft_lmtv_")
-      .foreach(dropStaleLayouts(spark, _, fp))
-    val toks = split(col("text"), " ")
-    val dRef = docs(spark, dir).filter(ruleKeep)
-      .select(col("doc_id"), toks.as("toks"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      dRef.select(explode(col("toks")).as("tok"))
-        .groupBy("tok").agg(count(lit(1)).as("c1"))
-        .write.mode("overwrite").format("parquet").saveAsTable(unTab)
-      val n2 = greatest(size(col("toks")) - 1, lit(0))
-      dRef.select(explode(zip_with(
-          slice(col("toks"), lit(1), n2), slice(col("toks"), lit(2), n2),
-          (a, b) => struct(a.as("a"), b.as("b")))).as("e"))
-        .select(col("e.a").as("a"), col("e.b").as("b"))
-        .groupBy("a", "b").agg(count(lit(1)).as("c2"))
-        .write.mode("overwrite").format("parquet").saveAsTable(bgTab)
-      val n3 = greatest(size(col("toks")) - 2, lit(0))
-      dRef.select(explode(zip_with(
-          zip_with(
-            slice(col("toks"), lit(1), n3), slice(col("toks"), lit(2), n3),
-            (a, b) => struct(a.as("u"), b.as("v"))),
-          slice(col("toks"), lit(3), n3),
-          (p, c) => struct(p.getField("u").as("u"),
-            p.getField("v").as("v"), c.as("w")))).as("e"))
-        .select(col("e.u").as("u"), col("e.v").as("v"), col("e.w").as("w"))
-        .groupBy("u", "v", "w").agg(count(lit(1)).as("c3"))
-        .write.mode("overwrite").format("parquet").saveAsTable(tgTab)
-      // scalars LAST: their presence implies the count tables landed
-      // (the ensureDedupIndex crash-ordering convention)
-      dRef.select(explode(col("toks")).as("tok"))
-        .agg(count(lit(1)).as("t"), countDistinct(col("tok")).as("v"))
-        .write.mode("overwrite").format("parquet").saveAsTable(tvTab)
-      (unTab, bgTab, tgTab, tvTab)
-    } finally dRef.unpersist(blocking = false)
+    val Seq(un, bg, tg, tv) = graft.sources.Storage.ensureLayout(spark,
+      Seq("graft_lm1_", "graft_lm2_", "graft_lm3_", "graft_lmtv_"),
+      Seq(s"$dir/documents.parquet")) { case Seq(unTab, bgTab, tgTab, tvTab) =>
+      val toks = split(col("text"), " ")
+      val dRef = docs(spark, dir).filter(ruleKeep)
+        .select(col("doc_id"), toks.as("toks"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        dRef.select(explode(col("toks")).as("tok"))
+          .groupBy("tok").agg(count(lit(1)).as("c1"))
+          .write.mode("overwrite").format("parquet").saveAsTable(unTab)
+        val n2 = greatest(size(col("toks")) - 1, lit(0))
+        dRef.select(explode(zip_with(
+            slice(col("toks"), lit(1), n2), slice(col("toks"), lit(2), n2),
+            (a, b) => struct(a.as("a"), b.as("b")))).as("e"))
+          .select(col("e.a").as("a"), col("e.b").as("b"))
+          .groupBy("a", "b").agg(count(lit(1)).as("c2"))
+          .write.mode("overwrite").format("parquet").saveAsTable(bgTab)
+        val n3 = greatest(size(col("toks")) - 2, lit(0))
+        dRef.select(explode(zip_with(
+            zip_with(
+              slice(col("toks"), lit(1), n3), slice(col("toks"), lit(2), n3),
+              (a, b) => struct(a.as("u"), b.as("v"))),
+            slice(col("toks"), lit(3), n3),
+            (p, c) => struct(p.getField("u").as("u"),
+              p.getField("v").as("v"), c.as("w")))).as("e"))
+          .select(col("e.u").as("u"), col("e.v").as("v"), col("e.w").as("w"))
+          .groupBy("u", "v", "w").agg(count(lit(1)).as("c3"))
+          .write.mode("overwrite").format("parquet").saveAsTable(tgTab)
+        dRef.select(explode(col("toks")).as("tok"))
+          .agg(count(lit(1)).as("t"), countDistinct(col("tok")).as("v"))
+          .write.mode("overwrite").format("parquet").saveAsTable(tvTab)
+      } finally dRef.unpersist(blocking = false)
+    }
+    (un, bg, tg, tv)
   }
 
   /** C4s': REFERENCE-trained LM perplexity — the actual CCNet shape:
@@ -1517,6 +1508,25 @@ object TextOps {
       .orderBy("doc_id")
   }
 
+  /** Persist the TRAINED tokenizer vocabulary as a fingerprint-keyed
+    * layout (the quality-model/ANN-codebook posture): one row per word
+    * type with its trained BPE token count. Training runs once per
+    * corpus fingerprint (Bench warms it untimed — the production shape,
+    * where a tokenizer is trained once and applied forever); the
+    * TRAINING cost itself stays timed in `c4_bpe_merges`, whose whole
+    * point is the train loop.
+    */
+  private[graft] def ensureBpeVocab(spark: SparkSession, dir: String,
+      rounds: Int = BpeRounds, cap: Int = BpeBatchCap): String =
+    graft.sources.Storage.ensureLayout(spark, Seq("graft_bpe_"),
+      Seq(s"$dir/documents.parquet"), s"${rounds}r${cap}c") { case Seq(tab) =>
+      val (_, finalVocab, lastCached) =
+        bpeTrain(spark, dir, rounds, cap, materializeFinal = true)
+      finalVocab.select(col("word"), size(col("seq")).cast("long").as("n_bpe"))
+        .write.mode("overwrite").format("parquet").saveAsTable(tab)
+      lastCached.foreach(_.unpersist(blocking = false))
+    }.head
+
   /** C4q: BPE ENCODE — apply the trained merge table ([[c4BpeMerges]]'s
     * 10 rounds) to the corpus and report per-document BPE token counts
     * (plus tokens-per-word, the compression signal a tokenizer budget
@@ -1534,30 +1544,6 @@ object TextOps {
     * never a per-occurrence re-merge. Every count is exact int64; the
     * single per-doc double (bpe_per_word) is one division rounded 6dp.
     */
-  /** Persist the TRAINED tokenizer vocabulary as a fingerprint-keyed
-    * layout (the quality-model/ANN-codebook posture): one row per word
-    * type with its trained BPE token count. Training runs once per
-    * corpus fingerprint (Bench warms it untimed — the production shape,
-    * where a tokenizer is trained once and applied forever); the
-    * TRAINING cost itself stays timed in `c4_bpe_merges`, whose whole
-    * point is the train loop.
-    */
-  private[graft] def ensureBpeVocab(spark: SparkSession, dir: String,
-      rounds: Int = BpeRounds, cap: Int = BpeBatchCap): String = {
-    import graft.sources.Storage.{dropStaleLayouts, sourceFingerprint}
-    val suffix = sourceFingerprint(s"$dir/documents.parquet") +
-      s"_${rounds}r${cap}c"
-    val tab = s"graft_bpe_$suffix"
-    if (spark.catalog.tableExists(tab)) return tab
-    dropStaleLayouts(spark, "graft_bpe_", suffix)
-    val (_, finalVocab, lastCached) =
-      bpeTrain(spark, dir, rounds, cap, materializeFinal = true)
-    finalVocab.select(col("word"), size(col("seq")).cast("long").as("n_bpe"))
-      .write.mode("overwrite").format("parquet").saveAsTable(tab)
-    lastCached.foreach(_.unpersist(blocking = false))
-    tab
-  }
-
   def c4BpeEncode(spark: SparkSession, dir: String,
       rounds: Int = BpeRounds, cap: Int = BpeBatchCap): DataFrame = {
     val enc = spark.table(ensureBpeVocab(spark, dir, rounds, cap))

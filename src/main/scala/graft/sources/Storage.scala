@@ -60,20 +60,68 @@ object Storage {
   def sourceFingerprint(paths: String*): String = {
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk) else Seq(f)
-    val md = java.security.MessageDigest.getInstance("MD5")
-    paths.flatMap(p => walk(new java.io.File(p)))
+    digest(paths.flatMap(p => walk(new java.io.File(p)))
       .map(f => s"${f.getPath}|${f.length}|${f.lastModified}")
-      .sorted
-      .foreach(line => md.update((line + "\n").getBytes("UTF-8")))
+      .sorted)
+  }
+
+  private def digest(lines: Seq[String]): String = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    lines.foreach(line => md.update((line + "\n").getBytes("UTF-8")))
     md.digest().take(8).map(b => f"$b%02x").mkString
   }
 
-  /** Drop layouts (catalog tables / warehouse dirs) built for an earlier
-    * fingerprint of the same source. Superseded layouts are dead weight —
-    * the key that named them can never be derived again — so letting them
-    * accumulate across corpus regenerations leaks a full table copy each
-    * time. Called whenever a layout is (re)created.
+  /** Catalog names of one persisted layout, one per role prefix:
+    * `<role><scope>_<fingerprint>[_<params>]`. The scope digests the
+    * sources' absolute paths — it names WHERE the corpus lives, so it
+    * survives a regeneration — and the fingerprint plus `params` name
+    * WHICH generation and configuration the layout was built from (a
+    * layout built with other parameters is not this layout).
     */
+  def layoutNames(roles: Seq[String], sources: Seq[String],
+      params: String): Seq[String] = {
+    val key = sourceFingerprint(sources: _*) +
+      (if (params.isEmpty) "" else s"_$params")
+    roles.map(r => s"$r${scope(sources)}_$key")
+  }
+
+  private def scope(sources: Seq[String]): String =
+    digest(sources.map(p => new java.io.File(p).getAbsoluteFile.toPath.normalize.toString))
+
+  /** The one lifecycle of a fingerprint-keyed persisted layout (b8
+    * tables, the ANN indexes, the dedup index and labels, the trained
+    * text models): returns the [[layoutNames]] of `roles` over
+    * `sources`, first running `build(names)` unless EVERY role's table
+    * exists. A crash mid-build leaves a partial layout, which counts as
+    * absent: the next call rebuilds it (builders write with overwrite).
+    * One-time and idempotent per session: reruns measure the query, not
+    * the write.
+    *
+    * Before a build, other layouts of the same role AND the same source
+    * path are swept: superseded generations (the corpus was regenerated,
+    * so their key can never be derived again and each would leak a
+    * table copy), other parameterizations (one live configuration per
+    * role and corpus), and leftover `_rt`/`_ct` staging tables. A
+    * layout built over another corpus path
+    * is a different scope and is never dropped, so side corpora (temp
+    * copies, spec corpora) coexist with the live one. `sweepAlso` names
+    * optional roles of the same layout (created later, e.g. the dedup
+    * tombstones) that are swept with it but not required to exist.
+    */
+  def ensureLayout(spark: SparkSession, roles: Seq[String],
+      sources: Seq[String], params: String = "",
+      sweepAlso: Seq[String] = Nil)(build: Seq[String] => Unit): Seq[String] = {
+    val all = layoutNames(roles ++ sweepAlso, sources, params)
+    val names = all.take(roles.length)
+    if (!names.forall(spark.catalog.tableExists)) {
+      (roles ++ sweepAlso).zip(all).foreach { case (r, keep) =>
+        dropStaleLayouts(spark, s"$r${scope(sources)}_", keep)
+      }
+      build(names)
+    }
+    names
+  }
+
   /** STARTUP-ONLY sweep for the standalone tools that run against the
     * persistent default warehouse (MaintBench, SemTopcAccuracy): delete
     * `graft_*` layout directories a PREVIOUS process left behind. Every
@@ -89,33 +137,71 @@ object Storage {
     * run — may invoke this, once, before any layout is built; builders
     * hitting a genuinely stale location fail loudly instead.
     */
-  def sweepOrphanWarehouseDirs(spark: SparkSession): Unit = {
-    val wh = new java.io.File(
-      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"))
-    Option(wh.listFiles()).toSeq.flatten
+  def sweepOrphanWarehouseDirs(spark: SparkSession): Unit =
+    warehouseEntries(spark)
       .filter(d => d.isDirectory && d.getName.startsWith("graft_") &&
         !spark.catalog.tableExists(d.getName))
       .foreach(org.apache.commons.io.FileUtils.deleteDirectory)
-  }
 
-  def dropStaleLayouts(
-      spark: SparkSession, prefix: String, keepSuffix: String): Unit = {
-    import scala.jdk.CollectionConverters._
+  /** The session warehouse dir, where managed layout tables live. */
+  def warehouse(spark: SparkSession): String =
+    spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
+
+  private def warehouseEntries(spark: SparkSession): Seq[java.io.File] =
+    Option(new java.io.File(warehouse(spark)).listFiles()).toSeq.flatten
+
+  /** Drop layouts (catalog tables / warehouse dirs) under `prefix` other
+    * than `keep` — see [[ensureLayout]] for which layouts share a prefix.
+    */
+  private def dropStaleLayouts(
+      spark: SparkSession, prefix: String, keep: String): Unit = {
     spark.catalog.listTables().collect()
       .map(_.name)
-      .filter(n => n.startsWith(prefix) && !n.endsWith(keepSuffix))
+      .filter(n => n.startsWith(prefix) && n != keep)
       .foreach(n => spark.sql(s"DROP TABLE IF EXISTS `$n`"))
-    val wh = new java.io.File(
-      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"))
-    Option(wh.listFiles()).toSeq.flatten
-      .filter(d => d.getName.startsWith(prefix) && !d.getName.endsWith(keepSuffix))
-      .foreach { d =>
-        // Files.walk holds directory handles until closed — scope it.
-        scala.util.Using.resource(java.nio.file.Files.walk(d.toPath)) { s =>
-          s.iterator().asScala.toSeq
-            .sortBy(-_.getNameCount)
-            .foreach(p => java.nio.file.Files.deleteIfExists(p))
-        }
-      }
+    // leftovers the catalog does not own (a dropped table's dir is gone)
+    warehouseEntries(spark)
+      .filter(d => d.getName.startsWith(prefix) && d.getName != keep)
+      .foreach(org.apache.commons.io.FileUtils.forceDelete)
+  }
+
+  private val OverwriteMode = "spark.sql.sources.partitionOverwriteMode"
+
+  /** Replace exactly the `parts` partitions (values of partition column
+    * `partCol`) of the partitioned catalog table `table` with `rows`, the
+    * full new content of those partitions — the one partial-overwrite
+    * path of the layout maintenance writers (ANN cell deletes and
+    * splits, dedup label rewrites). `rows` may read `table` itself: the
+    * staged rows are cut from their lineage once (Spark refuses to
+    * overwrite a table an input of the same plan reads), then land by
+    * dynamic partition overwrite, which only touches partitions present
+    * in the data.
+    *
+    * A partition left with no rows is dropped explicitly, BEFORE the
+    * overwrite: a crash between the two steps then leaves some
+    * partitions still holding their old rows (the change simply has not
+    * happened there yet and a retry re-applies it), never the
+    * half-applied state where the overwrite landed but an emptied
+    * partition still serves its removed rows.
+    */
+  def overwritePartitions(spark: SparkSession, table: String, partCol: String,
+      parts: Seq[Long], rows: DataFrame): Unit = {
+    import org.apache.spark.sql.functions.col
+    if (parts.isEmpty) return
+    val staged = rows
+      .filter(col(partCol).isin(parts.map(Long.box): _*))
+      .select(spark.table(table).columns.map(col).toIndexedSeq: _*)
+      .localCheckpoint(true)
+    val present = staged.select(col(partCol).cast("long")).distinct()
+      .collect().map(_.getLong(0)).toSet
+    parts.filterNot(present).foreach(p =>
+      spark.sql(s"ALTER TABLE $table DROP IF EXISTS PARTITION ($partCol=$p)"))
+    if (present.nonEmpty) {
+      val prev = spark.conf.getOption(OverwriteMode)
+      spark.conf.set(OverwriteMode, "dynamic")
+      try staged.write.mode("overwrite").insertInto(table)
+      finally prev.fold(spark.conf.unset(OverwriteMode))(spark.conf.set(OverwriteMode, _))
+    }
+    spark.catalog.refreshTable(table)
   }
 }

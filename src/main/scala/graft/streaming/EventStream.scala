@@ -749,8 +749,13 @@ object EventStream {
     Iterator.continually(spentSinks.poll()).takeWhile(_ != null)
       .foreach(clean => scala.util.Try(clean()))
 
-  // the last generation has no next run to sweep it
-  sys.addShutdownHook(sweepSpentSinks())
+  // the last generation has no next run to sweep it, and the memoized
+  // split dirs live until exit (File.deleteOnExit cannot remove a
+  // non-empty dir, so they are deleted here)
+  sys.addShutdownHook {
+    sweepSpentSinks()
+    splitLayouts.values.forEach(l => deleteDir(java.nio.file.Paths.get(l._1)))
+  }
 
   private def deleteDir(dir: java.nio.file.Path): Unit =
     org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
@@ -998,6 +1003,7 @@ object EventStream {
         new java.io.File(cached._1, "00_early.parquet").isFile &&
         new java.io.File(cached._1, "01_late.parquet").isFile) cached
     else {
+      if (cached != null) deleteDir(java.nio.file.Paths.get(cached._1))
       val rows = split.rows(spark)
       val cut = splitCut(spark, split)
       val fresh = (writeOrderedSplitDir(
@@ -1026,8 +1032,7 @@ object EventStream {
     val streamDir = JFiles.createTempDirectory("graft_incr_src")
     // Test-harness scaffolding, not an ingest pattern: coalesce(1)
     // single-task writes exist because the check needs EXACTLY one file
-    // per micro-batch; the temp split is reclaimed on JVM exit.
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(streamDir.toFile)
+    // per micro-batch; the split dir is deleted by the shutdown hook.
     def writeHalf(half: DataFrame, tag: String, mtime: Long): Unit = {
       val out = stage.resolve(tag)
       half.coalesce(1).write.mode("overwrite").parquet(out.toString)

@@ -16,9 +16,10 @@ import org.apache.spark.sql.functions._
   *
   * Usage: `runMain graft.tools.MaintBench <sfDir> [nBatches] [batchSize]`.
   * Each run copies the corpus to a temp dir and builds the temp
-  * layouts with `sweepStale = false`, so the shared fingerprint-keyed
-  * layouts of `sfDir` are neither mutated nor swept (a concurrent
-  * bench/verify session on `sfDir` keeps its warmed index). Prints one JSON line:
+  * layouts there; layout sweeps are scoped to the source path, so the
+  * shared fingerprint-keyed layouts of `sfDir` are neither mutated nor
+  * swept (a concurrent bench/verify session on `sfDir` keeps its warmed
+  * index). Prints one JSON line:
   * per-batch seconds for both paths, the compact cost, and the
   * cells-rewritten counts that explain them. Results are recorded in
   * BASELINE.md; this main exists so the numbers are reproducible.
@@ -45,8 +46,7 @@ object MaintBench {
     val annDir = java.nio.file.Files.createTempDirectory("graft_maint_ann").toString
     spark.read.parquet(s"$sfDir/embeddings.parquet")
       .write.mode("overwrite").parquet(s"$annDir/embeddings.parquet")
-    val (codesTab, _) = graft.queries.SimOps.ensureAnnIndex(spark, annDir,
-      sweepStale = false)
+    val (codesTab, _) = graft.queries.SimOps.ensureAnnIndex(spark, annDir)
     val annIds = spark.table(codesTab).select(col("b_id"))
       .orderBy(xxhash64(col("b_id"))) // scattered across cells, deterministic
       .limit(nBatches * batchSize).collect().map(_.getLong(0))
@@ -67,9 +67,7 @@ object MaintBench {
     val dedupDir = java.nio.file.Files.createTempDirectory("graft_maint_dd").toString
     spark.read.parquet(s"$sfDir/documents.parquet")
       .write.mode("overwrite").parquet(s"$dedupDir/documents.parquet")
-    graft.queries.DedupOps.ensureDedupIndex(spark, dedupDir, sweepStale = false)
-    val labTab = graft.queries.DedupOps.ensureDedupLabels(spark, dedupDir,
-      sweepStale = false)
+    val labTab = graft.queries.DedupOps.ensureDedupLabels(spark, dedupDir)
     val ddIds = spark.table(labTab).select(col("doc_id"))
       .orderBy(xxhash64(col("doc_id")))
       .limit(nBatches * batchSize).collect().map(_.getLong(0))

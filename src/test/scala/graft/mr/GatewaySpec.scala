@@ -92,6 +92,18 @@ class GatewaySpec extends SparkSuite {
     }
   }
 
+  test("launch rejects an oversized mapper_num with a 500 and registers no job") {
+    withGateway { base =>
+      val body = launchBody("charcount_example")
+        .replace(""""mapper_num": 2""", """"mapper_num": 2147483647""")
+      val res = post(s"$base/launch", body)
+      assert(res.statusCode() == 500, res.body())
+      assert(res.body().contains(""""ok":false"""))
+      assert(res.body().contains("mapper_num"))
+      assert(!res.body().contains("job_id"))
+    }
+  }
+
   test("concurrent launches: parallel POSTs all get distinct job ids and results") {
     withGateway { base =>
       import scala.concurrent.{Await, Future}

@@ -27,6 +27,19 @@ class JobStoreSpec extends SparkSuite {
     assert(store.launch(spark, JobSpec("j", "wordcount", "t"), kv()).isLeft)
   }
 
+  test("launchAsync rejects mapper/reducer counts above 1024 and registers nothing") {
+    val store = new JobStore(clock = () => 0L)
+    val tooWide = Seq(
+      JobSpec("j", "wordcount", "t", reducers = 1025),
+      JobSpec("j", "wordcount", "t", mappers = Int.MaxValue))
+    tooWide.foreach { spec =>
+      assert(store.launchAsync(spark, spec, kv(("a", "b"))) ==
+        Left("mapper_num and reducer_num must be <= 1024"))
+    }
+    // nothing was registered (ids start at 0)
+    assert(store.getResult(0L, "t") == Left("no such job: 0"))
+  }
+
   test("results expire after TTL (JOB_RESULT_TIMEOUT_SECOND, master.h:27)") {
     var now = 0L
     val store = new JobStore(clock = () => now, ttlMillis = 1000L)

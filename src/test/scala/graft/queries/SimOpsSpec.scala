@@ -389,11 +389,11 @@ class SimOpsSpec extends SparkSuite {
     try {
       full.filter(col("vec_id") % 2 === 0)
         .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-      val (codesTab, modelTab, _) = SimOps.ensureScaledAnnIndex(spark, dir)
+      val (codesTab, modelTab) = SimOps.ensureAnnIndex(spark, dir, SimOps.AnnIndex.Scaled)
       val before = spark.table(codesTab).count()
       val newVecs = full.filter(col("vec_id") % 2 =!= 0)
         .select(col("vec_id"), col("embedding"), col("label"))
-      val appended = SimOps.appendScaledAnnIndex(spark, dir, newVecs)
+      val appended = SimOps.appendAnnIndex(spark, dir, newVecs, SimOps.AnnIndex.Scaled)
       assert(appended == newVecs.count())
       assert(spark.table(codesTab).count() == before + appended)
       val (coarse, books) = SimOps.loadPqModel(spark, modelTab, m)
@@ -408,7 +408,7 @@ class SimOpsSpec extends SparkSuite {
       assert(stored == encode(newVecs),
         "scaled append diverged from the stored-model encode")
       val err = intercept[IllegalArgumentException] {
-        SimOps.appendScaledAnnIndex(spark, dir, newVecs)
+        SimOps.appendAnnIndex(spark, dir, newVecs, SimOps.AnnIndex.Scaled)
       }
       assert(err.getMessage.contains("already present"))
       // delete one whole (smallest) cell plus a scattered slice
@@ -419,9 +419,9 @@ class SimOpsSpec extends SparkSuite {
       val wholeCell = byCell.filter(_._2 == victimCell).map(_._1).toSeq
       val scattered = byCell.filter(_._2 != victimCell).map(_._1)
         .filter(_ % 7 == 3).toSeq
-      val removed = SimOps.deleteFromScaledAnnIndex(spark, dir, wholeCell ++ scattered)
+      val removed = SimOps.deleteFromAnnIndex(spark, dir, wholeCell ++ scattered, SimOps.AnnIndex.Scaled)
       assert(removed == (wholeCell ++ scattered).length)
-      assert(SimOps.deleteFromScaledAnnIndex(spark, dir, wholeCell ++ scattered) == 0L)
+      assert(SimOps.deleteFromAnnIndex(spark, dir, wholeCell ++ scattered, SimOps.AnnIndex.Scaled) == 0L)
       val deleted = (wholeCell ++ scattered).toSet
       val survivors = spark.table(codesTab)
         .select(col("b_id"), col("cell").cast("int"), col("codes"))
@@ -439,7 +439,7 @@ class SimOpsSpec extends SparkSuite {
   test("composed ingest-then-resolve: batch N's admitted novels are batch N+1's duplicate targets") {
     // The production ingest loop over the SCALED index: resolve batch N
     // (drifted vectors — novel vs the standing corpus), append its
-    // admitted novels via appendScaledAnnIndex, then batch N+1 (near
+    // admitted novels via appendAnnIndex, then batch N+1 (near
     // twins of batch N) must resolve AGAINST THEM through the index —
     // no per-batch rebuild anywhere. extraVectors re-attaches the
     // appended vectors' raw embeddings for the exact-cosine confirm
@@ -449,7 +449,7 @@ class SimOpsSpec extends SparkSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-annk-ingest").toString
     try {
       full.write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-      SimOps.ensureScaledAnnIndex(spark, dir)
+      SimOps.ensureAnnIndex(spark, dir, SimOps.AnnIndex.Scaled)
       // batch N: three drifted corpus vectors (a new mode the corpus
       // never had), ids in a fresh range ≢ 7 (mod 10) so the gates'
       // corpus-side slice exclusion keeps them
@@ -463,7 +463,7 @@ class SimOpsSpec extends SparkSuite {
       val resolvedN = SimOps.resolveSemanticTopc(spark, dir, arr(batchN)).collect()
       assert(resolvedN.length == 3 && resolvedN.forall(_.getBoolean(1)),
         s"batch N should be novel vs the corpus: ${resolvedN.mkString(";")}")
-      assert(SimOps.appendScaledAnnIndex(spark, dir, batchN) == 3L)
+      assert(SimOps.appendAnnIndex(spark, dir, batchN, SimOps.AnnIndex.Scaled) == 3L)
       // batch N+1: exact twins of batch N under fresh ids — duplicates
       // OF BATCH N, resolvable only through the appended postings
       val batchN1 = batchN.select(
@@ -505,7 +505,7 @@ class SimOpsSpec extends SparkSuite {
       full.filter(col("vec_id") % 2 === 0)
         .write.mode("overwrite").parquet(s"$dirA/embeddings.parquet")
       full.write.mode("overwrite").parquet(s"$dirB/embeddings.parquet")
-      val (codesA, modelA) = SimOps.ensureAnnIndex(spark, dirA, nc)
+      val (codesA, modelA) = SimOps.ensureAnnIndex(spark, dirA, SimOps.AnnIndex.perQuery(nc, 8, 16))
       def results(dir: String) = SimOps.c3AnnPqIndexed(spark, dir, nCells = nc)
         .collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
@@ -523,7 +523,7 @@ class SimOpsSpec extends SparkSuite {
       // over the full corpus, model and codes both
       val batch = full.filter(col("vec_id") % 2 =!= 0)
         .select(col("vec_id"), col("embedding"), col("label"))
-      SimOps.appendAnnIndex(spark, dirA, batch, nCells = nc)
+      SimOps.appendAnnIndex(spark, dirA, batch, SimOps.AnnIndex.perQuery(nc, 8, 16))
       SimOps.retrainAnnIndex(spark, dirA, Some(batch), nCells = nc)
       def codesContent(t: String) = spark.table(t)
         .select(col("b_id"), col("cell").cast("int"), col("codes"), col("label"))
@@ -532,11 +532,11 @@ class SimOpsSpec extends SparkSuite {
       def modelContent(t: String) = spark.table(t).collect()
         .map(r => (r.getString(0), r.getInt(1), r.getInt(2),
           r.getSeq[Double](3).toSeq)).toSet
-      // capture BEFORE building dirB's layout: ensureAnnIndex enforces
-      // one live configuration and sweeps dirA's tables as stale
+      // capture BEFORE building dirB's layout (dirA's tables stay: the
+      // stale sweep is scoped to one source path)
       val (retrainedCodes, retrainedModel, retrainedResults) =
         (codesContent(codesA), modelContent(modelA), results(dirA))
-      val (codesB, modelB) = SimOps.ensureAnnIndex(spark, dirB, nc)
+      val (codesB, modelB) = SimOps.ensureAnnIndex(spark, dirB, SimOps.AnnIndex.perQuery(nc, 8, 16))
       assert(retrainedModel == modelContent(modelB),
         "retrained codebook diverged from the from-scratch model")
       assert(retrainedCodes == codesContent(codesB),
@@ -984,9 +984,9 @@ class SimOpsSpec extends SparkSuite {
     val batch = vecs.keySet.filter(_ % 10 == 7)
     assert(out.map(_._1).toSet == batch && out.length == batch.size)
     // ground truth: probe cells from the STORED model (the SCALED index
-    // this family reads — ensureScaledAnnIndex, round 16), exact cosine
+    // this family reads — AnnIndex.Scaled, round 16), exact cosine
     // over the probed corpus cells
-    val (_, modelTab, _) = SimOps.ensureScaledAnnIndex(spark, sf)
+    val (_, modelTab) = SimOps.ensureAnnIndex(spark, sf, SimOps.AnnIndex.Scaled)
     val (coarse, _) = SimOps.loadPqModel(spark, modelTab, subspaces = 8)
     def d2(v: Array[Double], c: Seq[Double]): Double =
       v.zip(c).map { case (a, b) => (a - b) * (a - b) }.sum

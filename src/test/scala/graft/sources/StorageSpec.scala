@@ -4,7 +4,8 @@ import graft.SparkSuite
 import org.apache.spark.sql.functions._
 
 /** Physical-layout verification: bucketed joins plan without a shuffle;
-  * partitioned scans prune directories.
+  * partitioned scans prune directories; the persisted-layout lifecycle
+  * sweeps exactly one role's superseded generations on one source path.
   */
 class StorageSpec extends SparkSuite {
 
@@ -51,5 +52,69 @@ class StorageSpec extends SparkSuite {
     val expected = ev.filter(to_date(col("ts")) === "2024-01-02").count()
     assert(pruned.count() == expected)
     assert(expected > 0)
+  }
+
+  private def tmpDir(tag: String): String =
+    java.nio.file.Files.createTempDirectory(tag).toString
+
+  /** A tiny corpus of `n` rows at `dir`; rewriting it with another `n`
+    * is a regeneration at the same path (file sizes change).
+    */
+  private def corpus(dir: String, n: Int): String = {
+    spark.range(n).toDF("id").write.mode("overwrite").parquet(s"$dir/t.parquet")
+    s"$dir/t.parquet"
+  }
+
+  private var builds = 0
+
+  private def layout(roles: Seq[String], src: String): Seq[String] =
+    Storage.ensureLayout(spark, roles, Seq(src)) { names =>
+      builds += 1
+      names.foreach(t =>
+        spark.range(1).write.mode("overwrite").format("parquet").saveAsTable(t))
+    }
+
+  private def exists(t: String) = spark.catalog.tableExists(t)
+
+  test("layout lifecycle: two roles on one corpus coexist; a partial layout is rebuilt") {
+    val src = corpus(tmpDir("graft_lc_roles"), 10)
+    val Seq(x) = layout(Seq("graft_lca_x_"), src)
+    val Seq(y) = layout(Seq("graft_lca_y_"), src)
+    assert(x != y && exists(x) && exists(y))
+    val before = builds
+    assert(layout(Seq("graft_lca_x_"), src) == Seq(x), "ensure is idempotent")
+    assert(builds == before, "an existing layout must not be rebuilt")
+    // two-table layout with one table missing: absent, rebuilt whole
+    val Seq(p, q) = layout(Seq("graft_lca_p_", "graft_lca_q_"), src)
+    spark.sql(s"DROP TABLE $q")
+    assert(layout(Seq("graft_lca_p_", "graft_lca_q_"), src) == Seq(p, q))
+    assert(builds == before + 2 && exists(p) && exists(q))
+    Seq(x, y, p, q).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
+  test("layout lifecycle: regenerating a corpus sweeps only that role's old generation") {
+    val dir = tmpDir("graft_lc_regen")
+    val src = corpus(dir, 10)
+    val Seq(oldX) = layout(Seq("graft_lcb_x_"), src)
+    val Seq(oldY) = layout(Seq("graft_lcb_y_"), src)
+    corpus(dir, 20)
+    val Seq(newX) = layout(Seq("graft_lcb_x_"), src)
+    assert(newX != oldX && exists(newX))
+    assert(!exists(oldX), "the superseded generation of the rebuilt role must be swept")
+    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
+    assert(!new java.io.File(wh, oldX).exists(), "its warehouse dir must be gone too")
+    assert(exists(oldY), "another role's layout is swept only by its own rebuild")
+    Seq(newX, oldY).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
+  test("layout lifecycle: a layout for a second corpus path leaves the first path's in place") {
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val (d1, d2) = (tmpDir("graft_lc_path1"), tmpDir("graft_lc_path2"))
+    Seq(d1, d2).foreach(d => docs.write.parquet(s"$d/documents.parquet"))
+    val t1 = graft.queries.TextOps.ensureQualityModel(spark, d1)
+    val t2 = graft.queries.TextOps.ensureQualityModel(spark, d2)
+    assert(t1 != t2 && exists(t2))
+    assert(exists(t1), "building for another corpus path dropped the first path's layout")
+    Seq(t1, t2).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 }
