@@ -44,6 +44,13 @@ final class Gateway(spark: SparkSession, store: JobStore, port: Int = 2335,
 
   /** Bind + start; returns the actual port (use port 0 for ephemeral). */
   def start(): Int = {
+    // TCP_NODELAY for the accepted sockets. The server flushes the
+    // response headers as their own segment, so with Nagle on the body
+    // waits for the client's delayed ACK (~40 ms on Linux) on every
+    // response that carries one — every `/getresult` poll. The JDK reads
+    // this property once, in `ServerConfig`'s static initializer, so it
+    // must be set before the first `HttpServer.create` in the JVM.
+    System.setProperty("sun.net.httpserver.nodelay", "true")
     server = HttpServer.create(new InetSocketAddress(port), 0)
     server.createContext("/helloworld", (ex: HttpExchange) =>
       respond(ex, 200, "Hello world.", "text/plain"))

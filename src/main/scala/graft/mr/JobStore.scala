@@ -1,6 +1,8 @@
 package graft.mr
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types.StructType
 
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
@@ -31,7 +33,15 @@ import java.util.concurrent.atomic.AtomicLong
   *    (the driver never materializes them) and the job state holds a
   *    pointer; [[JobStore.readSpilled]] streams them back one bounded
   *    partition at a time (`toLocalIterator`), and the gateway's
-  *    `/getresult` streams that as a chunked response;
+  *    `/getresult` streams that as a chunked response. The gate measures
+  *    and then collects or spills ONE executed plan (see `materialize`):
+  *    nothing is persisted, and neither action reruns the user's
+  *    closures, because both read the job's shuffle outputs;
+  *  - user closures run at least once, not exactly once: a reduce may
+  *    run more than once per group (the sampling job of the range
+  *    partitioning recomputes the reduce stage; a retried task reruns
+  *    its closures). That is the reference's own contract — it re-runs
+  *    subjobs at least once — so side-effecting reduces are unsupported;
   *  - finished results expire after a TTL
   *    (`JOB_RESULT_TIMEOUT_SECOND=3600`, `master.h:27`; scanner
   *    `master.cc:449-463`) — eviction also deletes a spilled result's
@@ -209,42 +219,41 @@ final class JobStore(
       }
     }
 
-  /** O8/O10 result materialization, size-gated: one distributed aggregate
-    * measures the result's byte size WITHOUT bringing a row to the driver
-    * (the lineage's shuffle files are reused, so this reruns only the
-    * final stage); results within `spillBytes` collect inline (the
-    * reference's master-RAM shape, `job.h:86-88`), larger ones write the
-    * parquet spill sink executor-parallel with an order key
-    * (`monotonically_increasing_id` is monotone with the range-partition
-    * order MRJob already established, so the read-back `orderBy(mid)`
+  /** O8/O10 result materialization, size-gated, over ONE executed plan:
+    * planning `toRdd` runs the job's shuffle stages once, and the two
+    * actions below reuse their outputs, so each reruns only the final
+    * sort after the range shuffle — never the user's map, and never the
+    * reduce. The first action counts rows and UTF-8 bytes per partition
+    * without bringing a row to the driver; results within `spillBytes`
+    * are then collected inline (the reference's master-RAM shape,
+    * `job.h:86-88`), larger ones are written to the parquet spill sink
+    * by the executors with the order key `mid` = partition index << 33
+    * + row index (`monotonically_increasing_id`'s layout: the range
+    * partitions are in key order, so the read-back `orderBy(mid)`
     * restores the reference's key-ordered concatenation, job.cc:68-77).
+    * Nothing is persisted, so the store leaves no cached blocks behind.
     */
   private def materialize(
       spark: SparkSession, id: Long, out: Dataset[String]): JobResult = {
-    import org.apache.spark.sql.functions._
-    // DISK_ONLY persist scoped to this method: the sizing aggregate and
-    // the collect/spill are two actions — without it the whole lineage
-    // (including the USER's map/reduce closures) would execute twice,
-    // doubling cost and double-running any side-effecting UDF. Disk, not
-    // heap: the result may be arbitrarily large; unpersisted on exit so
-    // the store leaves no net cached blocks behind.
-    val df = out.toDF("result")
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    try {
-      val stats = df.agg(
-        count(lit(1)).cast("long"),
-        coalesce(sum(octet_length(col("result"))), lit(0L)).cast("long")).head()
-      val (rows, bytes) = (stats.getLong(0), stats.getLong(1))
-      if (bytes <= spillBytes)
-        InlineResult(df.collect().map(_.getString(0)))
-      else {
-        val dir = spillDir(id)
-        df.withColumn("mid", monotonically_increasing_id())
-          .select("mid", "result")
-          .write.mode("overwrite").parquet(dir)
-        SpilledResult(dir, rows, bytes)
+    val rows = out.toDF("result").queryExecution.toRdd
+    val sizes = rows.mapPartitions { it =>
+      var (n, bytes) = (0L, 0L)
+      it.foreach { r =>
+        n += 1
+        if (!r.isNullAt(0)) bytes += r.getUTF8String(0).numBytes
       }
-    } finally df.unpersist(blocking = false)
+      Iterator.single((n, bytes))
+    }.collect()
+    val (nRows, bytes) = (sizes.map(_._1).sum, sizes.map(_._2).sum)
+    if (bytes <= spillBytes) InlineResult(rows.map(resultText).collect())
+    else {
+      val dir = spillDir(id)
+      val keyed = rows.mapPartitionsWithIndex { (p, it) =>
+        it.zipWithIndex.map { case (r, i) => Row((p.toLong << 33) + i, resultText(r)) }
+      }
+      spark.createDataFrame(keyed, SpillSchema).write.mode("overwrite").parquet(dir)
+      SpilledResult(dir, nRows, bytes)
+    }
   }
 
   private def spillDir(id: Long): String =
@@ -497,6 +506,13 @@ object JobStore {
   /** Spark job-group tag for one MR job's stages. */
   def jobGroup(id: Long): String = s"graft-job-$id"
 
+  /** The spill sink's columns: the order key and the result string. */
+  private val SpillSchema = StructType.fromDDL("mid LONG, result STRING")
+
+  /** The result string of one executed-plan row (a reduce may emit null). */
+  private def resultText(r: InternalRow): String =
+    if (r.isNullAt(0)) null else r.getString(0)
+
   /** Stream a spilled result in the original key order, one bounded
     * partition on the driver at a time (`toLocalIterator`) — the scale
     * form of `/getresult` (the sort restoring O8's key-ordered concat is
@@ -504,7 +520,7 @@ object JobStore {
     */
   def readSpilled(spark: SparkSession, res: SpilledResult): Iterator[String] = {
     import scala.jdk.CollectionConverters._
-    spark.read.schema("mid LONG, result STRING").parquet(res.dir)
+    spark.read.schema(SpillSchema).parquet(res.dir)
       .orderBy("mid").select("result")
       .toLocalIterator.asScala.map(_.getString(0))
   }

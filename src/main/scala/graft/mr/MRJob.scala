@@ -27,6 +27,15 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * implicit contract — it re-executes subjobs at-least-once) see no
   * difference.
   *
+  * Execution contract: user closures run at least once, not exactly once.
+  * The reduce may run more than once per group: the sampling job of the
+  * final `repartitionByRange` recomputes the reduce stage, and a retried
+  * task reruns its closures. The reference re-runs subjobs at least once
+  * too, so side-effecting map or reduce functions are unsupported. Callers
+  * that act on the result more than once should execute one plan and
+  * reuse its shuffle outputs (`JobStore`'s size gate does) rather than
+  * rerun the lineage.
+  *
   * Scale note: `flatMapGroups` materializes one key's values at a time on
   * one task — the per-key value list must fit in executor memory. That is
   * inherent to the MapReduce Reduce contract itself; the relational surface

@@ -1,5 +1,6 @@
 package graft.sources
 
+import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode, ObjectMapper, ObjectReader}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -13,15 +14,17 @@ import org.apache.spark.sql.types._
   *  - O10 sink: `GET /getresult` returns the result strings as a JSON
   *    array (`gateway.cc:167-176`).
   *
-  * Here the gateway becomes a library API: schema-checked `spark.read
-  * .json` in, JSON array out. General tabular sources (parquet/csv/json/
-  * text) are one-liners on `spark.read` and are exercised throughout
-  * graft.Tables / the query surface.
+  * Here the gateway becomes a library API: a field-checked launch
+  * document in (decoded on the driver), JSON array out. General tabular
+  * sources (parquet/csv/json/text) are one-liners on `spark.read` and are
+  * exercised throughout graft.Tables / the query surface.
   */
 object Sources {
 
   /** The launch payload schema (gateway.cc:15-51, master_service.proto
-    * LaunchMsg). `from_json`-compatible for embedded use.
+    * LaunchMsg): the field list, in order, that [[parseLaunchJson]]
+    * checks and names in its error. `from_json`-compatible for embedded
+    * use.
     */
   val launchSchema: StructType = StructType(Seq(
     StructField("name", StringType, nullable = false),
@@ -41,50 +44,69 @@ object Sources {
       token: String,
       kvs: Dataset[(String, String)])
 
-  /** Read + validate one launch JSON document (the `/launch` body). Errors
-    * mirror the gateway's checks: missing/ill-typed fields and empty kvs
-    * are rejected (gateway.cc:15-51, master.cc:530-535).
+  /** Read + validate one launch JSON document (the `/launch` body) from
+    * a file on the session's Hadoop filesystem; same checks as
+    * [[parseLaunchJson]]. The bytes go to Jackson as they are, so it
+    * detects the encoding and skips a byte order mark. An unreadable file
+    * is a `Left`.
     */
-  def readLaunchJson(spark: SparkSession, path: String): Either[String, Launch] =
-    validateLaunch(spark, spark.read
-      .option("multiLine", "true")
-      .schema(launchSchema)
-      .option("mode", "FAILFAST")
-      .json(path))
+  def readLaunchJson(spark: SparkSession, path: String): Either[String, Launch] = {
+    val bytes =
+      try {
+        val p = new org.apache.hadoop.fs.Path(path)
+        val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
+        try Right(in.readAllBytes()) finally in.close()
+      } catch {
+        case e: java.io.IOException => Left(s"cannot read launch document: ${e.getMessage}")
+      }
+    bytes.flatMap(b => decodeLaunch(spark, launchReader.readTree(b)))
+  }
 
   /** Parse + validate a launch document held in memory (an HTTP `/launch`
-    * request body) — same schema and checks as [[readLaunchJson]].
+    * request body). Decoded on the driver — no Spark job. The checks
+    * mirror the gateway's (gateway.cc:15-51, master.cc:530-535): exactly
+    * one JSON object and nothing after it; `name`, `type` and `token` are
+    * strings, `mapper_num` and `reducer_num` 32-bit integers, `kvs` a
+    * non-empty array of objects whose `key` and `value` are strings.
+    * Unknown fields are ignored; single-quoted strings are malformed.
     */
-  def parseLaunchJson(spark: SparkSession, body: String): Either[String, Launch] = {
-    import spark.implicits._
-    validateLaunch(spark, spark.read
-      .schema(launchSchema)
-      .option("mode", "FAILFAST")
-      .json(Seq(body).toDS()))
-  }
+  def parseLaunchJson(spark: SparkSession, body: String): Either[String, Launch] =
+    decodeLaunch(spark, launchReader.readTree(body))
 
-  private def validateLaunch(
-      spark: SparkSession, raw: DataFrame): Either[String, Launch] = {
+  private def decodeLaunch(spark: SparkSession, read: => JsonNode): Either[String, Launch] = {
     import spark.implicits._
-    try {
-      val rows = raw.collect()
-      if (rows.length != 1) Left(s"expected one launch document, got ${rows.length}")
+    import scala.jdk.CollectionConverters._
+    def str(n: JsonNode) = n != null && n.isTextual
+    def valid(f: StructField, n: JsonNode) = f.dataType match {
+      case StringType => str(n)
+      case IntegerType => n != null && n.isInt
+      case _: ArrayType => n != null && n.isArray
+      case _ => false
+    }
+    val parsed =
+      try Option(read).filter(_.isObject)
+        .toRight("expected one launch JSON object")
+      catch { case e: java.io.IOException => Left(s"malformed launch JSON: ${e.getMessage}") }
+    parsed.flatMap { doc =>
+      val bad = launchSchema.fields.filterNot(f => valid(f, doc.get(f.name))).map(_.name)
+      if (bad.nonEmpty) Left(s"missing/invalid fields: ${bad.mkString(", ")}")
       else {
-        val r = rows(0)
-        val bad = launchSchema.fieldNames.filter(f => r.isNullAt(r.fieldIndex(f)))
-        if (bad.nonEmpty) Left(s"missing/invalid fields: ${bad.mkString(", ")}")
-        else {
-          val kvRows = r.getSeq[org.apache.spark.sql.Row](r.fieldIndex("kvs"))
-            .map(kv => (kv.getString(0), kv.getString(1)))
-          if (kvRows.isEmpty) Left("kvs must be non-empty") // master.cc:533-535
-          else Right(Launch(r.getString(0), r.getString(1), r.getInt(2),
-            r.getInt(3), r.getString(4), kvRows.toDS()))
-        }
+        val kvs = doc.get("kvs").elements.asScala
+          .map(kv => (kv.get("key"), kv.get("value"))).toIndexedSeq
+        val badKv = kvs.indexWhere { case (k, v) => !str(k) || !str(v) }
+        if (kvs.isEmpty) Left("kvs must be non-empty") // master.cc:533-535
+        else if (badKv >= 0) Left(s"kvs[$badKv] needs a string key and a string value")
+        else Right(Launch(doc.get("name").textValue, doc.get("type").textValue,
+          doc.get("mapper_num").intValue, doc.get("reducer_num").intValue,
+          doc.get("token").textValue,
+          kvs.map { case (k, v) => (k.textValue, v.textValue) }.toDS()))
       }
-    } catch {
-      case e: Exception => Left(s"malformed launch JSON: ${e.getMessage}")
     }
   }
+
+  /** Thread-safe, shared: content after the document is an error. */
+  private lazy val launchReader: ObjectReader = new ObjectMapper()
+    .readerFor(classOf[JsonNode]).`with`(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
 
   /** O10 sink: write result strings as a single JSON array file (the
     * `/getresult` response body shape, gateway.cc:167-176).

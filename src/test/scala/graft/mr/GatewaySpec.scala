@@ -392,4 +392,51 @@ class GatewaySpec extends SparkSuite {
       assert(wrongTok.statusCode() == 500 && wrongTok.body().contains("wrong token"))
     }
   }
+
+  test("launch validation: ill-typed kvs elements and documents are a 400 and register no job") {
+    val store = new JobStore()
+    val gw = new Gateway(spark, store, port = 0)
+    val port = gw.start()
+    try {
+      val base = s"http://127.0.0.1:$port"
+      val good = launchBody("charcount_example")
+      val kvs = """"kvs": [{"key": "1", "value": "v"}]"""
+      def withKvs(k: String) = good.replaceAll(""""kvs": \[.*\]""",
+        java.util.regex.Matcher.quoteReplacement(k))
+      val bad = Seq(
+        withKvs(""""kvs": [{"key": "a"}]"""),
+        withKvs(""""kvs": [{"value": "a"}]"""),
+        withKvs(""""kvs": [{"key": "a", "value": 7}]"""),
+        withKvs(""""kvs": [{"key": null, "value": "a"}]"""),
+        withKvs(""""kvs": [{"key": "a", "value": "b"}, "c"]"""),
+        withKvs(kvs).replace(""""name": "wc-test"""", """"name": 7"""),
+        withKvs(kvs).replace(""""type": "charcount_example"""", """"type": ["x"]"""),
+        withKvs(kvs).replace(""""token": "ztorchan"""", """"token": true"""),
+        s"[${withKvs(kvs)}]",
+        withKvs(kvs) + """ {"name": "again"}""")
+      bad.foreach { body =>
+        val res = post(s"$base/launch", body)
+        assert(res.statusCode() == 400, s"$body -> ${res.statusCode()} ${res.body()}")
+      }
+      // nothing was registered (ids start at 0)
+      assert(store.status(0L).isEmpty)
+      // the same document with well-typed kvs is accepted
+      val ok = post(s"$base/launch", withKvs(kvs))
+      assert(ok.statusCode() == 200, ok.body())
+    } finally gw.stop()
+  }
+
+  test("responses with a body are not held back by Nagle: 30 sequential polls, median under 20 ms") {
+    withGateway { base =>
+      val url = s"$base/getresult?job_id=12345&token=t"
+      val ms = (1 to 30).map { _ =>
+        val t0 = System.nanoTime()
+        val res = get(url)
+        val t1 = System.nanoTime()
+        assert(res.statusCode() == 500 && res.body().contains("no such job"), res.body())
+        (t1 - t0) / 1e6
+      }.sorted
+      assert(ms(ms.size / 2) < 20.0, s"round trips (ms, sorted): ${ms.mkString(", ")}")
+    }
+  }
 }

@@ -343,10 +343,42 @@ class JobStoreSpec extends SparkSuite {
     assert(Option(new java.io.File(root).list()).forall(_.isEmpty),
       "an inline result wrote a spill directory")
   }
+
+  test("the size gate reruns no map, at most one extra reduce per group, and caches nothing") {
+    // One executed plan for the gate: the sizing action and the collect
+    // (or spill write) reuse the job's shuffle outputs. The reduce may
+    // run twice per group, because the sampling job of the range
+    // partitioning recomputes the reduce stage.
+    JobTypeRegistry.register("counting_spec",
+      (k, v) => { JobStoreSpecBlocker.count("map"); Iterator.single((k, v)) },
+      (k, vs) => { JobStoreSpecBlocker.count("reduce"); vs.map(v => s"$k=$v") })
+    val input = kv((0 until 40).map(i => (f"k$i%02d", s"v$i")): _*)
+    val expected = (0 until 40).map(i => f"k$i%02d=v$i")
+    val root = java.nio.file.Files.createTempDirectory("graft_gate_spec").toString
+    Seq(1L << 20, 16L).foreach { spillBytes =>
+      val store = new JobStore(clock = () => 0L, spillBytes = spillBytes, spillRoot = root)
+      val cached = spark.sparkContext.getPersistentRDDs.keySet
+      JobStoreSpecBlocker.resetCounts()
+      val Right(id) = store.launch(spark, JobSpec("count", "counting_spec", "t"), input)
+      assert(JobStoreSpecBlocker.counted("map") == 40, s"spillBytes=$spillBytes")
+      assert(JobStoreSpecBlocker.counted("reduce") <= 80, s"spillBytes=$spillBytes")
+      assert(spark.sparkContext.getPersistentRDDs.keySet == cached,
+        s"spillBytes=$spillBytes left cached RDDs behind")
+      store.fetchResult(id, "t") match {
+        case Right(JobStore.InlineResult(rows)) =>
+          assert(spillBytes > 16L && rows.toSeq == expected)
+        case Right(sp: JobStore.SpilledResult) =>
+          assert(spillBytes == 16L && JobStore.readSpilled(spark, sp).toSeq == expected)
+          assert(sp.rows == 40L && sp.bytes == expected.map(_.length).sum)
+        case other => fail(s"unexpected result $other")
+      }
+    }
+  }
 }
 
-/** Shared latch registry for the admission specs — tasks run in-JVM
-  * under local[*], so the map closures gate on these directly.
+/** Shared latch and call-count registry for the admission and size-gate
+  * specs — tasks run in-JVM under local[*], so the map closures gate on
+  * (and count into) these directly.
   */
 object JobStoreSpecBlocker {
   private val latches =
@@ -359,4 +391,12 @@ object JobStoreSpecBlocker {
   def release(key: String): Unit = latch(key).countDown()
   def markRan(key: String): Unit = { executed.add(key); () }
   def ran(key: String): Boolean = executed.contains(key)
+  private val counts =
+    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
+  def count(key: String): Unit = {
+    counts.computeIfAbsent(key, _ => new java.util.concurrent.atomic.AtomicLong()).incrementAndGet()
+    ()
+  }
+  def counted(key: String): Long = Option(counts.get(key)).map(_.get).getOrElse(0L)
+  def resetCounts(): Unit = counts.clear()
 }

@@ -139,4 +139,62 @@ class SourcesSpec extends SparkSuite {
       .collect().map(_.getString(0)).toSeq
     assert(lines == Seq("line one", "line two", "line three"))
   }
+
+  private val wellTyped =
+    """{"name": "x", "type": "wordcount", "mapper_num": 1, "reducer_num": 1,
+      |"token": "t", "kvs": [{"key": "a", "value": "b"}]}""".stripMargin
+
+  test("validation: a kvs element without a string key and value is rejected") {
+    val bad = Seq(
+      """[{"key": "a"}]""", """[{"value": "b"}]""", """[{"key": "a", "value": null}]""",
+      """[{"key": 1, "value": "b"}]""", """[{"key": "a", "value": {"x": 1}}]""",
+      """[{"key": "a", "value": "b"}, "c"]""")
+    bad.foreach { kvs =>
+      val body = wellTyped.replace("""[{"key": "a", "value": "b"}]""", kvs)
+      val parsed = Sources.parseLaunchJson(spark, body)
+      assert(parsed.isLeft && parsed.swap.exists(_.contains("kvs[")), s"$kvs -> $parsed")
+      assert(Sources.readLaunchJson(spark, writeTemp(body)).isLeft, kvs)
+    }
+  }
+
+  test("validation: non-string name/type/token, a top-level array and trailing content are rejected") {
+    Seq("name" -> "7", "type" -> "[\"wordcount\"]", "token" -> "null").foreach { case (f, v) =>
+      val body = wellTyped.replaceFirst(s""""$f": "[^"]*"""", s""""$f": $v""")
+      assert(body != wellTyped)
+      val parsed = Sources.parseLaunchJson(spark, body)
+      assert(parsed.isLeft && parsed.swap.exists(_.contains(f)), s"$body -> $parsed")
+    }
+    Seq(s"[$wellTyped]", wellTyped + " {}", wellTyped + " x").foreach { body =>
+      assert(Sources.parseLaunchJson(spark, body).isLeft, body)
+      assert(Sources.readLaunchJson(spark, writeTemp(body)).isLeft, body)
+    }
+  }
+
+  test("a launch document is decoded without a Spark job, the same from a file") {
+    val group = "sources-spec-parse"
+    spark.sparkContext.setJobGroup(group, "launch decoding")
+    val parsed = try Sources.parseLaunchJson(spark, wellTyped)
+      finally spark.sparkContext.clearJobGroup()
+    assert(spark.sparkContext.statusTracker.getJobIdsForGroup(group).isEmpty)
+    val Right(launch) = parsed
+    assert(launch.name == "x" && launch.jobType == "wordcount" && launch.token == "t")
+    assert(launch.mapperNum == 1 && launch.reducerNum == 1)
+    assert(launch.kvs.collect().toSeq == Seq(("a", "b")))
+    val Right(fromFile) = Sources.readLaunchJson(spark, writeTemp(wellTyped))
+    assert(fromFile.copy(kvs = launch.kvs) == launch)
+    assert(fromFile.kvs.collect().toSeq == Seq(("a", "b")))
+    assert(Sources.readLaunchJson(spark, "/nonexistent/launch.json").isLeft)
+  }
+
+  test("a launch file may start with a UTF-8 byte order mark; single quotes are malformed") {
+    val f = Files.createTempFile("launch", ".json")
+    Files.write(f, Array(0xEF, 0xBB, 0xBF).map(_.toByte) ++
+      wellTyped.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val Right(launch) = Sources.readLaunchJson(spark, f.toString)
+    assert(launch.name == "x" && launch.kvs.collect().toSeq == Seq(("a", "b")))
+    val quoted = wellTyped.replace("\"name\": \"x\"", "'name': 'x'")
+    assert(quoted != wellTyped)
+    assert(Sources.parseLaunchJson(spark, quoted).isLeft)
+    assert(Sources.readLaunchJson(spark, writeTemp(quoted)).isLeft)
+  }
 }
